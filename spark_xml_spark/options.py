@@ -35,6 +35,17 @@ def _to_bool(v) -> bool:
     return str(v).strip().lower() in _TRUE
 
 
+def get_option(opts: dict, *names):
+    """The first of ``names`` set in ``opts``, else None. Spark may hand
+    over lower-cased option keys (CaseInsensitiveDict), so each name is
+    looked up as written and lower-cased."""
+    for n in names:
+        v = opts.get(n) or opts.get(n.lower())
+        if v is not None:
+            return v
+    return None
+
+
 @dataclass
 class XmlOptions:
     """Options accepted by the XML source/sink and column functions.

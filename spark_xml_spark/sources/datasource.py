@@ -39,7 +39,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from spark_xml_spark.options import XmlOptions
+from spark_xml_spark.options import XmlOptions, get_option
 from spark_xml_spark.xmlcore import generator, infer, parser, tokenizer
 
 FORMAT_NAME = "xml-graft"
@@ -59,13 +59,15 @@ FORMAT_NAME = "xml-graft"
 # raises instead of guessing.
 _CATALOG_STASH: dict = {}
 
-# --- tier-adoption instrumentation (env-gated; off = zero cost) -------------
+# --- tier-adoption instrumentation (always tallied, export env-gated) -------
 # Which parse tier actually served each record is invisible from the plan
-# (the fallbacks are per-batch, inside the Python reader). When
-# SPARK_XML_TIER_STATS_DIR names a directory, every read task appends one
-# JSON line per (tier, phase-time) tally on exhaustion; bench.py aggregates
-# them into BENCH_r{N}'s tier_adoption counters. Local-diagnostics only: on
-# a real cluster the env var is unset and none of this code runs.
+# (the fallbacks are per-batch, inside the Python reader). Every read task
+# keeps a tally (a few dict updates per batch); when
+# SPARK_XML_TIER_STATS_DIR names a directory, the task also pre-warms its
+# imports and appends one JSON line per (tier, phase-time) tally on
+# exhaustion; bench.py aggregates them into BENCH_r{N}'s tier_adoption
+# counters. Local diagnostics only: on a real cluster the env var is unset
+# and nothing is written.
 _TIER_STATS_ENV = "SPARK_XML_TIER_STATS_DIR"
 
 
@@ -103,6 +105,15 @@ class _TierTally:
                 fh.write(lines)
         except OSError:
             pass  # diagnostics must never fail the scan
+
+
+def _counted(rows, tally: _TierTally, tier: str) -> Iterator:
+    """Yield ``rows``, booking their count to ``tier`` once exhausted."""
+    n = 0
+    for row in rows:
+        n += 1
+        yield row
+    tally.add(tier, n)
 
 
 def _sidecar_dir() -> str:
@@ -197,11 +208,9 @@ def _path_exists(p: str) -> bool:
 def _listing_opts(opts: dict):
     """(pathGlobFilter, recursiveFileLookup) from a case-insensitive
     option dict — Spark's standard file-source listing options."""
-    gf = opts.get("pathGlobFilter") or opts.get("pathglobfilter")
+    gf = get_option(opts, "pathGlobFilter")
     rl = str(
-        opts.get("recursiveFileLookup")
-        or opts.get("recursivefilelookup")
-        or "false"
+        get_option(opts, "recursiveFileLookup") or "false"
     ).lower() == "true"
     return gf, rl
 
@@ -647,6 +656,17 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
         return _py_cast_column(vals, caster, target_type)
 
 
+def _transpose_groups(groups, group_map, ncols):
+    """Per-record capture-group tuples -> one list of raw strings per
+    schema field; a field no group feeds is all-null."""
+    gcols = list(zip(*groups))  # C-speed transpose: one tuple per group
+    cols: List[list] = [None] * ncols  # type: ignore[list-item]
+    for g, i, _is_attr in group_map:
+        cols[i] = list(gcols[g - 1])
+    nrec = len(groups)
+    return [[None] * nrec if c is None else c for c in cols]
+
+
 def _collect_columns(batch, pat, group_map, ncols, strict=None):
     """Match every record against the learned whole-record pattern and
     transpose the captured field strings into columns. None when any
@@ -670,17 +690,7 @@ def _collect_columns(batch, pat, group_map, ncols, strict=None):
             groups = [m.groups() for m in map(pat.match, batch)]
         except AttributeError:
             return None
-    gcols = list(zip(*groups))  # C-speed transpose: one tuple per group
-    nrec = len(batch)
-    cols: List[list] = [None] * ncols  # type: ignore[list-item]
-    mapped = set()
-    for g, i, _is_attr in group_map:
-        cols[i] = list(gcols[g - 1])
-        mapped.add(i)
-    for i in range(ncols):
-        if i not in mapped:
-            cols[i] = [None] * nrec
-    return cols
+    return _transpose_groups(groups, group_map, ncols)
 
 
 def _collect_group_columns(batch, pat, ngroups):
@@ -779,77 +789,75 @@ def _assemble_struct_arrays(cols, fast, schema, arrow_schema, guards, nrec):
     return arrays
 
 
+def _row_batches(batch, schema: T.StructType, xopts: XmlOptions,
+                 batch_size: int, fix) -> list:
+    """The exact row path for one record batch: the generic parser (and
+    its parse-mode policy), the timezone fix-up, then Arrow assembly.
+    Every columnar tier re-runs a batch here when it can't prove its own
+    result equivalent."""
+    rows = parser.parse_records(iter(batch), schema, xopts)
+    if fix is not None:
+        rows = (fix(row) for row in rows)
+    return list(_rows_to_arrow_batches(rows, schema, batch_size))
+
+
 def _columnar_struct_batches(
     records: Iterator[str], schema: T.StructType, xopts: XmlOptions,
-    batch_size: int, fast, tally=None,
+    batch_size: int, fast, tally: _TierTally,
 ):
     """Struct-mode columnar scan: the generic-verified learned pattern
     (parser.FastFlatParser struct mode) feeds the Arrow transpose; any
     batch the pattern or casts can't prove equivalent re-runs through the
     exact row path."""
     import itertools
+    from time import perf_counter
 
     import pyarrow as pa
 
-    fields = schema.fields
     arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
+        [pa.field(f.name, _arrow_type(f.dataType)) for f in schema.fields]
     )
     fix = _tz_fixer(schema)
     guards = _cast_guards(xopts)
-
-    def row_path(batch):
-        rows = parser.parse_records(iter(batch), schema, xopts)
-        if fix is not None:
-            rows = (fix(row) for row in rows)
-        yield from _rows_to_arrow_batches(rows, schema, batch_size)
-
     records = iter(records)
-    timer = __import__("time").perf_counter if tally is not None else None
     while True:
         batch = list(itertools.islice(records, batch_size))
         if not batch:
             return
-        t0 = timer() if timer else 0.0
+        t0 = perf_counter()
         if fast.struct_pattern is None and fast._struct_learn_attempts < 16:
             probe = next((r for r in batch if "&" not in r), None)
             if probe is not None:
                 fast._learn_struct_pattern(probe)
         pat = fast.struct_pattern
-        cols = None
+        arrays = None
         if pat is not None and _struct_gmap_columnar_ok(fast.struct_gmap):
             cols = _collect_group_columns(batch, pat, len(fast.struct_gmap))
-        if cols is None:
-            if tally is not None:
-                out = list(row_path(batch))
-                tally.add("row_fallback", len(batch), timer() - t0)
-                yield from out
-            else:
-                yield from row_path(batch)
+            if cols is not None:
+                try:
+                    arrays = _assemble_struct_arrays(
+                        cols, fast, schema, arrow_schema, guards, len(batch)
+                    )
+                except Exception:
+                    pass  # unprovable cast: the batch takes the row path
+        if arrays is None:
+            out = _row_batches(batch, schema, xopts, batch_size, fix)
+            tally.add("row_fallback", len(batch), perf_counter() - t0)
+            yield from out
             continue
-        try:
-            arrays = _assemble_struct_arrays(
-                cols, fast, schema, arrow_schema, guards, len(batch)
-            )
-        except Exception:
-            if tally is not None:
-                out = list(row_path(batch))
-                tally.add("row_fallback", len(batch), timer() - t0)
-                yield from out
-            else:
-                yield from row_path(batch)
-            continue
-        if tally is not None:
-            tally.add("columnar_struct", len(batch), timer() - t0)
+        tally.add("columnar_struct", len(batch), perf_counter() - t0)
         yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
-def _cast_ladder(cols, fast, fields, arrow_schema, guards, attr_cols):
-    """The shared column-cast step of every flat columnar path: one Arrow
-    array per schema field via _cast_column with attribute-caster
-    dispatch. None when a Python caster rejected a value (malformed /
+def _cast_ladder(cols, fast, fields, arrow_schema, guards):
+    """The column-cast step of the flat columnar tiers: one Arrow array
+    per schema field via _cast_column, root-attribute columns with
+    attribute semantics. The attribute set is read from the LEARNED
+    group map on every call — it is empty until a pattern is learned.
+    None when a Python caster rejected a value (malformed /
     whitespace-only) — the caller re-runs the batch through the exact row
     path so the parse-mode policy applies."""
+    attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
     try:
         return [
             _cast_column(
@@ -866,41 +874,42 @@ def _cast_ladder(cols, fast, fields, arrow_schema, guards, attr_cols):
         return None
 
 
-def _columnar_window_batches(
-    witer, schema: T.StructType, xopts: XmlOptions, batch_size: int, tally=None
+def _columnar_batches(
+    items, schema: T.StructType, xopts: XmlOptions, batch_size: int,
+    tally: _TierTally,
 ):
-    """Fused window scan: consume tokenizer.scan_split_windows items and run
-    the learned STRICT whole-record pattern's findall straight over each
-    clean window — no per-record slicing, decoding, or match objects.
+    """The columnar scan: consume tokenizer.scan_split_windows items and
+    yield Arrow record batches. Unpushed scans feed it the tokenizer's
+    windows; pushed scans feed it ``("rec", record)`` items that passed
+    the raw-text prefilter.
 
-    Soundness: a window is already proven clean by _batch_scan_window (no
-    quotes/comments/PIs, aligned starts/ends, no nested same-name rows), a
-    strict-pattern match is confined to one record ([^<]* fields, literal
-    tags) and can occur at most once per record, so
-    ``len(findall) == len(spans)`` implies per-record strict.match
-    equivalence; strict has no optional groups, so every findall tuple has
-    all groups participating (None-vs-'' never arises — missing-field
-    records fail strict and route to the per-record path). Any
-    ineligibility (entities in the window, unlearned pattern, duplicate
-    group targets, cast failure) falls back to the exact per-record
-    machinery with nothing lost."""
-    import itertools
+    A clean window runs the learned STRICT whole-record pattern's findall
+    straight over its text — no per-record slicing, decoding, or match
+    objects (tier ``columnar_window``). Soundness: a window is already
+    proven clean by _batch_scan_window (no quotes/comments/PIs, aligned
+    starts/ends, no nested same-name rows), a strict-pattern match is
+    confined to one record ([^<]* fields, literal tags) and can occur at
+    most once per record, so ``len(findall) == len(spans)`` implies
+    per-record strict.match equivalence; strict has no optional groups,
+    so every findall tuple has all groups participating (None-vs-''
+    never arises — missing-field records fail strict and route to the
+    per-record ladder).
+
+    Records — ``"rec"`` items and the records of an ineligible window —
+    take the per-record ladder: learn the pattern, strict-then-optional
+    match, Arrow casts (tier ``columnar_flat``). Anything the ladder
+    can't prove (entities, shape drift, duplicate group targets, a
+    rejected cast) re-runs through the exact row path (``row_fallback``),
+    so every tier applies the generic parser's parse-mode policy."""
+    from time import perf_counter
 
     import pyarrow as pa
 
     fast = parser.FastFlatParser.try_build(schema, xopts)
     if fast.simple_structs:
-        def _recs():
-            for item in witer:
-                if item[0] == "rec":
-                    yield item[1]
-                else:
-                    text, spans = item[1], item[2]
-                    for s, e in spans:
-                        yield text[s:e]
-
         yield from _columnar_struct_batches(
-            _recs(), schema, xopts, batch_size, fast, tally=tally
+            tokenizer.window_records(items), schema, xopts, batch_size,
+            fast, tally,
         )
         return
     fields = schema.fields
@@ -910,129 +919,110 @@ def _columnar_window_batches(
     )
     fix = _tz_fixer(schema)
     guards = _cast_guards(xopts)
-    attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
-    timer = __import__("time").perf_counter if tally is not None else None
 
-    def row_path(batch):
-        rows = parser.parse_records(iter(batch), schema, xopts)
-        if fix is not None:
-            rows = (fix(row) for row in rows)
-        yield from _rows_to_arrow_batches(rows, schema, batch_size)
+    def learn(probe):
+        try:
+            fast._parse_regex(probe)  # compiles the pattern on success
+        except Exception:
+            pass
+
+    def transposable():
+        # a field fed by several groups (root attr + same-named element,
+        # or a duplicated tag) parses correctly on the row tiers via
+        # in-order overwrite, but the columnar transpose would
+        # double-append its column — those records stay on the row path
+        targets = [i for _g, i, _a in fast.group_map]
+        return len(targets) == len(set(targets))
 
     def emit_records(batch):
-        """Per-record path for a list of records (strict/optional match,
-        row fallback) — the same ladder as _columnar_flat_batches,
-        INCLUDING pattern learning: on corpora whose windows are all
-        dirty (attributes or apostrophes make every window quote-bearing)
-        all records arrive here, so this must be able to learn the
-        pattern or the scan would silently run the row tier forever."""
-        t0 = timer() if timer else 0.0
+        """The per-record ladder, INCLUDING pattern learning: pushed
+        scans and corpora whose windows are all dirty (attributes or
+        apostrophes make every window quote-bearing) send every record
+        here, so this must be able to learn the pattern or the scan
+        would silently run the row tier forever."""
+        t0 = perf_counter()
         if fast.seq_pattern is None:
             probe = next((r for r in batch if "&" not in r), None)
             if probe is not None:
-                try:
-                    fast._parse_regex(probe)  # compiles pattern on success
-                except Exception:
-                    pass
-        cols = None
-        targets = [i for _g, i, _a in fast.group_map]
-        if fast.seq_pattern is not None and len(targets) == len(set(targets)):
+                learn(probe)
+        arrays = None
+        if fast.seq_pattern is not None and transposable():
             cols = _collect_columns(
                 batch, fast.seq_pattern, fast.group_map, ncols,
                 strict=fast.strict_seq_pattern,
             )
-        if cols is not None:
-            arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards,
-                                  attr_cols)
-            if arrays is not None:
-                if tally is not None:
-                    tally.add("columnar_flat", len(batch), timer() - t0)
-                return [pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)]
-        out = list(row_path(batch))
-        if tally is not None:
-            tally.add("row_fallback", len(batch), timer() - t0)
+            if cols is not None:
+                arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards)
+        if arrays is not None:
+            tally.add("columnar_flat", len(batch), perf_counter() - t0)
+            return [pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)]
+        out = _row_batches(batch, schema, xopts, batch_size, fix)
+        tally.add("row_fallback", len(batch), perf_counter() - t0)
         return out
 
     def emit_groups(groups, refs):
-        """Group tuples (strict window captures) -> one arrow batch; cast
-        failure re-slices the records and uses the per-record ladder."""
-        t0 = timer() if timer else 0.0
-        gcols = list(zip(*groups))
-        cols: List = [None] * ncols
-        mapped = set()
-        for g, i, _a in fast.group_map:
-            cols[i] = list(gcols[g - 1])
-            mapped.add(i)
-        n = len(groups)
-        for i in range(ncols):
-            if i not in mapped:
-                cols[i] = [None] * n
-        arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards,
-                              attr_cols)
+        """Strict window captures -> one Arrow batch; a cast failure
+        re-slices the records and uses the per-record ladder."""
+        t0 = perf_counter()
+        cols = _transpose_groups(groups, fast.group_map, ncols)
+        arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards)
         if arrays is None:
             return emit_records([t[s:e] for t, s, e in refs])
-        if tally is not None:
-            tally.add("columnar_window", n, timer() - t0)
+        tally.add("columnar_window", len(groups), perf_counter() - t0)
         return [pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)]
+
+    learn_attempts = 0
+
+    def window_groups(text, spans):
+        """The strict findall's group tuples for a clean window, one per
+        span; None when the window must take the per-record ladder."""
+        nonlocal learn_attempts
+        if fast.seq_pattern is None and learn_attempts < 16:
+            s0, e0 = spans[0]
+            probe = text[s0:e0]
+            if "&" not in probe:
+                learn_attempts += 1
+                learn(probe)
+        wp = fast.strict_window_pattern
+        if wp is None or "&" in text or not transposable():
+            return None
+        t0 = perf_counter()
+        found = wp.findall(text)
+        if len(found) != len(spans):
+            return None
+        if wp.groups == 1:
+            found = [(v,) for v in found]
+        # findall cost booked to the window tier
+        tally.add("columnar_window", 0, perf_counter() - t0)
+        return found
 
     pending_groups: List[tuple] = []
     pending_refs: List[tuple] = []
     rec_buf: List[str] = []
-    learn_attempts = 0
-    ngroups = None
-
-    for item in witer:
+    for item in items:
         if item[0] == "win":
             text, spans = item[1], item[2]
-            if fast.seq_pattern is None and learn_attempts < 16:
-                s0, e0 = spans[0]
-                probe = text[s0:e0]
-                if "&" not in probe:
-                    learn_attempts += 1
-                    try:
-                        fast._parse_regex(probe)
-                    except Exception:
-                        pass
-            wp = fast.strict_window_pattern
-            targets = [i for _g, i, _a in fast.group_map]
-            if (
-                wp is not None
-                and len(targets) == len(set(targets))
-                and "&" not in text
-            ):
-                t0 = timer() if timer else 0.0
-                found = wp.findall(text)
-                if len(found) == len(spans):
-                    if rec_buf:
-                        yield from emit_records(rec_buf)
-                        rec_buf = []
-                    if ngroups is None:
-                        ngroups = wp.groups
-                    if ngroups == 1:
-                        found = [(v,) for v in found]
-                    pending_groups.extend(found)
-                    pending_refs.extend((text, s, e) for s, e in spans)
-                    if tally is not None:
-                        # findall cost booked to the window tier
-                        tally.add("columnar_window", 0, timer() - t0)
-                    while len(pending_groups) >= batch_size:
-                        yield from emit_groups(
-                            pending_groups[:batch_size],
-                            pending_refs[:batch_size],
-                        )
-                        pending_groups = pending_groups[batch_size:]
-                        pending_refs = pending_refs[batch_size:]
-                    continue
-            # ineligible window: records through the per-record ladder
-            if pending_groups:
-                yield from emit_groups(pending_groups, pending_refs)
-                pending_groups, pending_refs = [], []
-            rec_buf.extend(text[s:e] for s, e in spans)
-        else:
-            if pending_groups:
-                yield from emit_groups(pending_groups, pending_refs)
-                pending_groups, pending_refs = [], []
+            found = window_groups(text, spans)
+            if found is not None:
+                if rec_buf:
+                    yield from emit_records(rec_buf)
+                    rec_buf = []
+                pending_groups.extend(found)
+                pending_refs.extend((text, s, e) for s, e in spans)
+                while len(pending_groups) >= batch_size:
+                    yield from emit_groups(
+                        pending_groups[:batch_size], pending_refs[:batch_size]
+                    )
+                    pending_groups = pending_groups[batch_size:]
+                    pending_refs = pending_refs[batch_size:]
+                continue
+        if pending_groups:
+            yield from emit_groups(pending_groups, pending_refs)
+            pending_groups, pending_refs = [], []
+        if item[0] == "rec":
             rec_buf.append(item[1])
+        else:  # ineligible window
+            rec_buf.extend(text[s:e] for s, e in spans)
         while len(rec_buf) >= batch_size:
             yield from emit_records(rec_buf[:batch_size])
             rec_buf = rec_buf[batch_size:]
@@ -1040,76 +1030,6 @@ def _columnar_window_batches(
         yield from emit_groups(pending_groups, pending_refs)
     if rec_buf:
         yield from emit_records(rec_buf)
-
-
-def _columnar_flat_batches(
-    records: Iterator[str], schema: T.StructType, xopts: XmlOptions,
-    batch_size: int, tally=None,
-):
-    import itertools
-
-    import pyarrow as pa
-
-    fast = parser.FastFlatParser.try_build(schema, xopts)
-    if fast.simple_structs:
-        yield from _columnar_struct_batches(
-            records, schema, xopts, batch_size, fast, tally=tally
-        )
-        return
-    fields = schema.fields
-    ncols = len(fields)
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
-    )
-    fix = _tz_fixer(schema)
-    guards = _cast_guards(xopts)
-
-    def row_path(batch):
-        rows = parser.parse_records(iter(batch), schema, xopts)
-        if fix is not None:
-            rows = (fix(row) for row in rows)
-        yield from _rows_to_arrow_batches(rows, schema, batch_size)
-
-    records = iter(records)
-    timer = __import__("time").perf_counter if tally is not None else None
-    while True:
-        batch = list(itertools.islice(records, batch_size))
-        if not batch:
-            return
-        t0 = timer() if timer else 0.0
-        if fast.seq_pattern is None:
-            probe = next((r for r in batch if "&" not in r), None)
-            if probe is not None:
-                try:
-                    fast._parse_regex(probe)  # compiles the pattern on success
-                except Exception:
-                    pass
-        cols = None
-        targets = [i for _g, i, _a in fast.group_map]
-        if fast.seq_pattern is not None and len(targets) == len(set(targets)):
-            # a field fed by several groups (root attr + same-named element,
-            # or a duplicated tag) parses correctly on the row tiers via
-            # in-order overwrite, but the columnar transpose would
-            # double-append its column — those scans stay on the row path
-            cols = _collect_columns(
-                batch, fast.seq_pattern, fast.group_map, ncols,
-                strict=fast.strict_seq_pattern,
-            )
-        if cols is not None:
-            attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
-            arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards,
-                                  attr_cols)
-            if arrays is not None:
-                if tally is not None:
-                    tally.add("columnar_flat", len(batch), timer() - t0)
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-                continue
-        if tally is not None:
-            out = list(row_path(batch))
-            tally.add("row_fallback", len(batch), timer() - t0)
-            yield from out
-        else:
-            yield from row_path(batch)
 
 
 # --- filter pushdown -------------------------------------------------------
@@ -1366,14 +1286,6 @@ class XmlReader(DataSourceReader):
         if not self._path:
             raise ValueError("path option is required for the xml data source")
 
-    def _opt(self, *names):
-        # Spark lower-cases option keys (CaseInsensitiveDict) — look up both.
-        for n in names:
-            v = self._opts_dict.get(n) or self._opts_dict.get(n.lower())
-            if v is not None:
-                return v
-        return None
-
     def _discover(self, need_files: bool = False):
         """Driver-side Hive-style partition discovery, cached on self.
         pushFilters (to classify partition filters) and partitions() (to
@@ -1423,7 +1335,9 @@ class XmlReader(DataSourceReader):
 
     def partitions(self) -> List[InputPartition]:
         xopts = XmlOptions.from_dict(self._opts_dict)
-        open_cost = int(self._opt("openCostBytes") or 4 * 1024 * 1024)
+        open_cost = int(
+            get_option(self._opts_dict, "openCostBytes") or 4 * 1024 * 1024
+        )
         try:
             pfiles, pcols = self._discover(need_files=True)
         except OSError as exc:
@@ -1444,27 +1358,7 @@ class XmlReader(DataSourceReader):
             )
         listed = [(f, sz) for f, sz, _ in pfiles] if pfiles is not None else None
         sizes = dict(listed) if listed is not None else {}
-        explicit = self._opt("targetSplitSize", "maxPartitionBytes")
-        if explicit is not None:
-            target = int(explicit)
-        else:
-            # Spark's maxSplitBytes: min(maxPartitionBytes,
-            # max(openCostInBytes, totalBytes/minPartitionNum)) — small
-            # corpora split finer to feed every core, huge corpora cap at
-            # 128 MB per task, and the open cost keeps a million tiny
-            # files from becoming a million tasks.
-            total = open_cost  # avoid zero; matches Spark's +openCost/file
-            for _f, size in listed or ():
-                total += size + open_cost
-            par = int(self._opt("minPartitions") or 0)
-            if par <= 0:
-                # split planning runs in Spark's Python planner worker,
-                # where getActiveSession() is None — read_xml injects the
-                # session's defaultParallelism as minPartitions; raw
-                # format() reads fall back to the planner host's cores
-                par = os.cpu_count() or 8
-            bytes_per_core = total // max(par, 1)
-            target = min(128 * 1024 * 1024, max(open_cost, bytes_per_core))
+        target = self._split_target(open_cost, listed)
         out = _pack_splits(
             tokenizer.plan_splits(self._path, xopts.charset, target, files=listed),
             target,
@@ -1475,14 +1369,25 @@ class XmlReader(DataSourceReader):
         return out
 
     def _split_target(self, open_cost: int, listed) -> int:
-        explicit = self._opt("targetSplitSize", "maxPartitionBytes")
+        explicit = get_option(
+            self._opts_dict, "targetSplitSize", "maxPartitionBytes"
+        )
         if explicit is not None:
             return int(explicit)
-        total = open_cost
+        # Spark's maxSplitBytes: min(maxPartitionBytes,
+        # max(openCostInBytes, totalBytes/minPartitionNum)) — small corpora
+        # split finer to feed every core, huge corpora cap at 128 MB per
+        # task, and the open cost keeps a million tiny files from becoming
+        # a million tasks.
+        total = open_cost  # avoid zero; matches Spark's +openCost/file
         for _f, size in listed or ():
             total += size + open_cost
-        par = int(self._opt("minPartitions") or 0)
+        par = int(get_option(self._opts_dict, "minPartitions") or 0)
         if par <= 0:
+            # split planning runs in Spark's Python planner worker, where
+            # getActiveSession() is None — read_xml injects the session's
+            # defaultParallelism as minPartitions; raw format() reads fall
+            # back to the planner host's cores
             par = os.cpu_count() or 8
         bytes_per_core = total // max(par, 1)
         return min(128 * 1024 * 1024, max(open_cost, bytes_per_core))
@@ -1543,19 +1448,18 @@ class XmlReader(DataSourceReader):
         return out
 
     def read(self, partition: XmlInputPartition) -> Iterator:
-        tally = _TierTally() if _tier_stats_dir() else None
-        if tally is None:
-            gen = self._read_impl(partition, None)
-        else:
+        tally = _TierTally()
+        gen = self._read_impl(partition, tally)
+        if _tier_stats_dir():
             # Pre-warm the heavy lazy imports OUTSIDE any timed region,
             # booked to an explicit "setup" tally (once per worker
             # process; ~0 on reuse). Without this, each worker's first
             # timed batch absorbed the one-time pyarrow.compute import
             # (~0.3s), so a tiny tier could report secs wildly out of
             # proportion to its rows and corrupt tier economics.
-            import time as _time
+            from time import perf_counter
 
-            t0 = _time.perf_counter()
+            t0 = perf_counter()
             import pyarrow  # noqa: F401
             import pyarrow.compute  # noqa: F401
 
@@ -1563,16 +1467,16 @@ class XmlReader(DataSourceReader):
             # its _pandas_api shim (~0.35s/worker) — trigger it here or
             # the first timed cast batch absorbs it
             pyarrow.array(["x"], pyarrow.string())
-            tally.add("setup", 0, _time.perf_counter() - t0)
-            gen = self._read_tallied(partition, tally)
+            tally.add("setup", 0, perf_counter() - t0)
+            gen = self._flush_after(gen, tally)
         pv = getattr(partition, "pvals", ())
         if pv:
             gen = self._attach_pvals(gen, pv)
         yield from gen
 
-    def _read_tallied(self, partition, tally) -> Iterator:
+    def _flush_after(self, gen, tally) -> Iterator:
         try:
-            yield from self._read_impl(partition, tally)
+            yield from gen
         finally:
             tally.flush()
 
@@ -1609,12 +1513,14 @@ class XmlReader(DataSourceReader):
         xopts = XmlOptions.from_dict(self._opts_dict)
         dschema = self._data_schema()
 
-        def _records():
+        def _items():
             for path, start, end, compression, whole_file in partition.splits:
                 split = tokenizer.FileSplit(path, start, end, compression, whole_file)
-                yield from tokenizer.scan_split(split, xopts.row_tag, xopts.charset)
+                yield from tokenizer.scan_split_windows(
+                    split, xopts.row_tag, xopts.charset
+                )
 
-        records = _records()
+        records = tokenizer.window_records(_items())
         corrupt = xopts.column_name_of_corrupt_record
         if self._pushed and xopts.mode != "FAILFAST":
             # raw-text reject shortcut: skip parsing records that can't
@@ -1634,82 +1540,48 @@ class XmlReader(DataSourceReader):
             rows = (row for row in rows if all(p(row) for p in preds))
 
         arrow_flag = str(
-            self._opts_dict.get("arrowBatches")
-            or self._opts_dict.get("arrowbatches")
-            or "true"
+            get_option(self._opts_dict, "arrowBatches") or "true"
         ).lower()
         if arrow_flag == "false":
-            if tally is None:
-                yield from rows
-            else:
-                nr = 0
-                for row in rows:
-                    nr += 1
-                    yield row
-                tally.add("row_tuple", nr)
+            yield from _counted(rows, tally, "row_tuple")
             return
         batch_size = int(
-            self._opts_dict.get("arrowBatchSize")
-            or self._opts_dict.get("arrowbatchsize")
+            get_option(self._opts_dict, "arrowBatchSize")
             or 8192  # fewer IPC batches & JVM per-batch setups than 4096
         )
-        columnar_flag = str(
-            self._opts_dict.get("columnar")
-            or self._opts_dict.get("columnarBatches")
-            or self._opts_dict.get("columnarbatches")
-            or "true"
-        ).lower()
-        if columnar_flag != "false" and _columnar_ok(dschema, xopts):
+        if _columnar_ok(dschema, xopts):
             # Columnar fast path: record batches go straight from matched
             # field strings to Arrow arrays with C-level casts; any batch
             # the pattern or casts can't prove equivalent re-runs through
             # the exact row path. `rows` above was never advanced, so
-            # `records` is still whole (minus the raw-text prefilter,
-            # which composes). Pushed filters are evaluated per batch
-            # with pyarrow.compute masks when every filter maps; if any
-            # doesn't, the row path below handles them all.
+            # `records` is still whole.
             if not self._pushed:
-                # fused window scan: no pushed filters -> consume clean
-                # tokenizer windows directly (no per-record slicing or
-                # match objects); pushed scans keep the record path so
-                # the raw-text prefilter composes
-                def _windows():
-                    for path, start, end, compression, whole_file in (
-                        partition.splits
-                    ):
-                        sp = tokenizer.FileSplit(
-                            path, start, end, compression, whole_file
-                        )
-                        yield from tokenizer.scan_split_windows(
-                            sp, xopts.row_tag, xopts.charset
-                        )
-
-                yield from _columnar_window_batches(
-                    _windows(), dschema, xopts, batch_size, tally=tally
+                # unpushed: consume the tokenizer's clean windows directly
+                yield from _columnar_batches(
+                    _items(), dschema, xopts, batch_size, tally
                 )
                 return
-            masks = None
-            if self._pushed:
-                masks = [
-                    _compile_filter_arrow(f, dschema, corrupt)
-                    for f in self._pushed
-                ]
-                if any(m is None for m in masks):
-                    masks = []  # not fully expressible: use the row path
-            if masks is None or masks:
+            # pushed: per-record items, so the raw-text prefilter
+            # composes; the filters run per batch as pyarrow.compute
+            # masks when every one maps, else the row path below
+            # evaluates them all
+            masks = [
+                _compile_filter_arrow(f, dschema, corrupt)
+                for f in self._pushed
+            ]
+            if all(m is not None for m in masks):
                 import pyarrow.compute as pc
 
-                for batch in _columnar_flat_batches(
-                    records, dschema, xopts, batch_size, tally=tally
+                for batch in _columnar_batches(
+                    (("rec", r) for r in records), dschema, xopts, batch_size,
+                    tally,
                 ):
-                    if masks:
-                        mask = masks[0](batch)
-                        for m in masks[1:]:
-                            mask = pc.and_(mask, m(batch))
-                        batch = batch.filter(mask)
-                        if batch.num_rows == 0:
-                            continue
-                    yield batch
+                    mask = masks[0](batch)
+                    for m in masks[1:]:
+                        mask = pc.and_(mask, m(batch))
+                    batch = batch.filter(mask)
+                    if batch.num_rows:
+                        yield batch
                 return
         # Probe arrow conversion on the first batch only: the rows are
         # buffered, so an unmappable schema (or value shape) falls back to
@@ -1721,24 +1593,12 @@ class XmlReader(DataSourceReader):
         try:
             first = next(_rows_to_arrow_batches(iter(buf), dschema, batch_size))
         except Exception:
-            if tally is not None:
-                tally.add("row_tuple", len(buf))
-            yield from buf
-            if tally is None:
-                yield from rows
-            else:
-                nr = 0
-                for row in rows:
-                    nr += 1
-                    yield row
-                tally.add("row_tuple", nr)
+            yield from _counted(itertools.chain(buf, rows), tally, "row_tuple")
             return
-        if tally is not None:
-            tally.add("row_arrow", first.num_rows)
+        tally.add("row_arrow", first.num_rows)
         yield first
         for b in _rows_to_arrow_batches(rows, dschema, batch_size):
-            if tally is not None:
-                tally.add("row_arrow", b.num_rows)
+            tally.add("row_arrow", b.num_rows)
             yield b
 
 
@@ -1944,9 +1804,7 @@ class XmlWriter(DataSourceWriter):
             _fs.delete_dir(self._path)
 
     def _partition_by(self) -> List[str]:
-        raw = self._opts_dict.get("partitionBy") or self._opts_dict.get(
-            "partitionby"
-        )
+        raw = get_option(self._opts_dict, "partitionBy")
         return [c.strip() for c in raw.split(",") if c.strip()] if raw else []
 
     def write(self, iterator) -> XmlCommitMessage:
@@ -2017,9 +1875,7 @@ class XmlDataSource(DataSource):
         ratio = xopts.sampling_ratio
         rng = random.Random(1)
         limit_raw = (
-            self.options.get("inferLimit")
-            or self.options.get("inferlimit")
-            or _DEFAULT_INFER_LIMIT
+            get_option(self.options, "inferLimit") or _DEFAULT_INFER_LIMIT
         )
         limit = int(limit_raw) or None
 

@@ -30,7 +30,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from spark_xml_spark.options import XmlOptions
+from spark_xml_spark.options import XmlOptions, get_option
 from spark_xml_spark.xmlcore import parser, tokenizer
 
 _LOG = logging.getLogger(__name__)
@@ -56,21 +56,17 @@ class XmlStreamReader(DataSourceStreamReader):
         if not self._path:
             raise ValueError("path option is required for the xml stream source")
         self._target = int(
-            options.get("targetSplitSize")
-            or options.get("targetsplitsize")
-            or 128 * 1024 * 1024
+            get_option(options, "targetSplitSize") or 128 * 1024 * 1024
         )
-        mf = options.get("maxFilesPerTrigger") or options.get("maxfilespertrigger")
-        mb = options.get("maxBytesPerTrigger") or options.get("maxbytespertrigger")
+        mf = get_option(options, "maxFilesPerTrigger")
+        mb = get_option(options, "maxBytesPerTrigger")
         self._max_files = int(mf) if mf is not None else None
         self._max_bytes = int(mb) if mb is not None else None
         if self._max_files is not None and self._max_files <= 0:
             raise ValueError("maxFilesPerTrigger must be a positive integer")
         if self._max_bytes is not None and self._max_bytes <= 0:
             raise ValueError("maxBytesPerTrigger must be a positive integer")
-        self._cursor_path = options.get("admissionCursorPath") or options.get(
-            "admissioncursorpath"
-        )
+        self._cursor_path = get_option(options, "admissionCursorPath")
         self._legacy_cursor_paths: List[str] = []
         if self._cursor_path is None and (
             self._max_files is not None or self._max_bytes is not None
@@ -81,9 +77,7 @@ class XmlStreamReader(DataSourceStreamReader):
             # and a capped query gets a capped batch 0 on a fresh backlog
             # start with no explicit cursor option. Local paths only —
             # the cursor file is written with plain open()/os.replace.
-            ckpt = options.get("checkpointLocation") or options.get(
-                "checkpointlocation"
-            )
+            ckpt = get_option(options, "checkpointLocation")
             if ckpt and "://" not in ckpt:
                 # Namespace the cursor PER SOURCE: a query that unions two
                 # capped xml-graft readers hands both the same reader
@@ -115,8 +109,7 @@ class XmlStreamReader(DataSourceStreamReader):
                         gf,
                         rl,
                         str(
-                            self._opts_dict.get("latestFirst")
-                            or self._opts_dict.get("latestfirst")
+                            get_option(self._opts_dict, "latestFirst")
                             or "false"
                         ).lower(),
                     )
@@ -157,7 +150,7 @@ class XmlStreamReader(DataSourceStreamReader):
         # stands in for mtime order (deterministic, no extra stat calls;
         # date-partitioned and part-numbered layouts sort chronologically).
         self._latest_first = str(
-            options.get("latestFirst") or options.get("latestfirst") or "false"
+            get_option(options, "latestFirst") or "false"
         ).lower() == "true"
         # Admission-control state (driver-side instance, one per query run).
         # Three pieces, kept separate because they answer different safety
@@ -415,9 +408,7 @@ class XmlStreamReader(DataSourceStreamReader):
         # bin-pack small splits so a many-small-files batch stays O(cores)
         # tasks (same maxSplitBytes/open-cost shape as the batch reader)
         open_cost = int(
-            self._opts_dict.get("openCostBytes")
-            or self._opts_dict.get("opencostbytes")
-            or 4 * 1024 * 1024
+            get_option(self._opts_dict, "openCostBytes") or 4 * 1024 * 1024
         )
 
         def _size(t):
@@ -427,8 +418,7 @@ class XmlStreamReader(DataSourceStreamReader):
 
         total = sum(_size(t) + open_cost for t in raw)
         par = int(
-            self._opts_dict.get("minPartitions")
-            or self._opts_dict.get("minpartitions")
+            get_option(self._opts_dict, "minPartitions")
             or (os.cpu_count() or 8)
         )
         pack_target = min(self._target, max(open_cost, total // max(par, 1)))
@@ -528,9 +518,7 @@ class XmlStreamWriter(DataSourceStreamWriter):
             raise ValueError("path option is required for the xml stream sink")
 
     def _partition_by(self) -> List[str]:
-        raw = self._opts_dict.get("partitionBy") or self._opts_dict.get(
-            "partitionby"
-        )
+        raw = get_option(self._opts_dict, "partitionBy")
         return [c.strip() for c in raw.split(",") if c.strip()] if raw else []
 
     def write(self, iterator) -> XmlStreamCommitMessage:

@@ -643,7 +643,13 @@ def scan_split(split: FileSplit, row_tag: str, charset: str = "UTF-8") -> Iterat
     (XmlInputFormat.scala:193-224 readUntilStartElement); the supported
     contract is rowTag elements that do not self-nest. Property-tested in
     tests/test_property_roundtrip.py."""
-    for item in scan_split_windows(split, row_tag, charset):
+    return window_records(scan_split_windows(split, row_tag, charset))
+
+
+def window_records(items) -> Iterator[str]:
+    """Flatten :func:`scan_split_windows` items into record strings, in
+    document order."""
+    for item in items:
         if item[0] == "rec":
             yield item[1]
         else:

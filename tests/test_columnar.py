@@ -1,6 +1,6 @@
 """Columnar flat-scan fast path: exact equivalence with the row path.
 
-The columnar path (sources/datasource._columnar_flat_batches) must be
+The columnar path (sources/datasource._columnar_batches) must be
 invisible: same values, same nulls, same malformed-record policy as the
 per-row parse for every record shape, falling back wherever equivalence
 isn't provable.
@@ -22,7 +22,9 @@ def _both_paths(records, schema, opts):
     rows = parser.parse_records(iter(records), schema, opts)
     rows = [fix(r) for r in rows] if fix else list(rows)
     ref = list(D._rows_to_arrow_batches(iter(rows), schema, 512))
-    col = list(D._columnar_flat_batches(iter(records), schema, opts, 512))
+    col = list(D._columnar_batches(
+        (("rec", r) for r in records), schema, opts, 512, D._TierTally()
+    ))
     rt = pa.Table.from_batches(ref) if ref else None
     ct = pa.Table.from_batches(col) if col else None
     return rt, ct
@@ -123,7 +125,9 @@ def test_failfast_raises():
     )
     recs = [_rec(), _rec(i="notanint")]
     with pytest.raises(Exception):
-        list(D._columnar_flat_batches(iter(recs), SCHEMA, opts, 512))
+        list(D._columnar_batches(
+            (("rec", r) for r in recs), SCHEMA, opts, 512, D._TierTally()
+        ))
 
 
 def test_reordered_fields_fall_back():
@@ -409,7 +413,7 @@ def test_duplicate_tag_columnar_falls_back():
     assert ct["a"].to_pylist() == ["2", "3"]  # last occurrence wins
 
 
-# --- fused window path (scan_split_windows -> _columnar_window_batches) ----
+# --- window items (scan_split_windows -> _columnar_batches) ----------------
 
 
 def _window_vs_record_paths(doc: str, schema, opts, row_tag="r",
@@ -436,8 +440,12 @@ def _window_vs_record_paths(doc: str, schema, opts, row_tag="r",
         for s in splits:
             yield from tok.scan_split(s, row_tag, charset)
 
-    win = list(D._columnar_window_batches(windows(), schema, opts, 256))
-    rec = list(D._columnar_flat_batches(records(), schema, opts, 256))
+    win = list(
+        D._columnar_batches(windows(), schema, opts, 256, D._TierTally())
+    )
+    rec = list(D._columnar_batches(
+        (("rec", r) for r in records()), schema, opts, 256, D._TierTally()
+    ))
     wt = pa.Table.from_batches(win) if win else None
     rt = pa.Table.from_batches(rec) if rec else None
     return wt, rt, list(records())
@@ -517,9 +525,130 @@ def test_window_path_learns_on_dirty_window_corpora():
 
     tally = D._TierTally()
     batches = list(
-        D._columnar_window_batches(windows(), schema, opts, 256, tally=tally)
+        D._columnar_batches(windows(), schema, opts, 256, tally)
     )
     assert pa.Table.from_batches(batches).num_rows == 2000
     # the learned-pattern tier served everything; zero rows on the row tier
     assert tally.counts.get("columnar_flat") == 2000
     assert "row_fallback" not in tally.counts
+
+
+# --- reader level: parse modes and tier routing, Spark-free ----------------
+
+
+def _reader_read(tmp_path, doc, schema, opts, filters=None):
+    """Write doc, then plan and read it through the data source reader in
+    process, as a Spark task would; returns the rows as dicts."""
+    p = tmp_path / "t.xml"
+    p.write_text(doc)
+    reader_cls = D.XmlPushdownReader if filters is not None else D.XmlReader
+    reader = reader_cls({"path": str(p), **opts}, schema)
+    if filters is not None:
+        assert reader.pushFilters(filters) == []  # every filter pushed
+    out = []
+    for part in reader.partitions():
+        for item in reader.read(part):
+            if isinstance(item, pa.RecordBatch):
+                out.extend(item.to_pylist())
+            else:
+                out.append(dict(zip(schema.names, item)))
+    return out
+
+
+_ATTR_SCHEMA = T.StructType(
+    [
+        T.StructField("_id", T.LongType()),
+        T.StructField("_status", T.StringType()),
+        T.StructField("price", T.DoubleType()),
+    ]
+)
+# an empty attribute on a non-string column is malformed on the generic
+# parser; the clean record ahead of it lets the scan learn its pattern
+_ATTR_DOC = (
+    '<root><r id="1" status="A"><price>1.0</price></r>'
+    '<r id="" status="E"><price>9.0</price></r></root>'
+)
+
+
+@pytest.mark.parametrize("mode", ["PERMISSIVE", "DROPMALFORMED", "FAILFAST"])
+def test_empty_root_attribute_follows_parse_mode(tmp_path, mode):
+    """Root-attribute columns take attribute cast semantics on the default
+    (unpushed) read path, so an empty numeric attribute is malformed in
+    every mode, exactly as on the generic parser — never a silent null
+    next to the record's other values."""
+    opts = {"rowTag": "r", "mode": mode}
+    good = {"_id": 1, "_status": "A", "price": 1.0}
+    if mode == "FAILFAST":
+        with pytest.raises(parser.MalformedRecordError):
+            _reader_read(tmp_path, _ATTR_DOC, _ATTR_SCHEMA, opts)
+        return
+    got = _reader_read(tmp_path, _ATTR_DOC, _ATTR_SCHEMA, opts)
+    want = [good]
+    if mode == "PERMISSIVE":
+        want.append({"_id": None, "_status": None, "price": None})
+    assert got == want
+    # the exact row path agrees
+    exact = _reader_read(
+        tmp_path, _ATTR_DOC, _ATTR_SCHEMA, {**opts, "arrowBatches": "false"}
+    )
+    assert exact == want
+
+
+def _tier_rows(stats_dir):
+    rows = {}
+    for f in stats_dir.iterdir():
+        for line in f.read_text().splitlines():
+            rec = json.loads(line)
+            rows[rec["tier"]] = rows.get(rec["tier"], 0) + rec["rows"]
+    return rows
+
+
+_ROUTE_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("v", T.DoubleType()),
+    ]
+)
+_ROUTE_DOC = "<root>" + "".join(
+    f"<r><k>{k}</k><name>n{k % 7}</name><v>{k}.5</v></r>" for k in range(3000)
+) + "</root>"
+
+
+def test_unpushed_flat_scan_served_by_window_tier(tmp_path, monkeypatch):
+    stats = tmp_path / "stats"
+    stats.mkdir()
+    monkeypatch.setenv(D._TIER_STATS_ENV, str(stats))
+    got = _reader_read(tmp_path, _ROUTE_DOC, _ROUTE_SCHEMA, {"rowTag": "r"})
+    assert len(got) == 3000
+    tiers = _tier_rows(stats)
+    assert tiers.get("columnar_window") == 3000, tiers
+    assert not any(t.startswith("row_") and n for t, n in tiers.items())
+
+
+def test_arrow_pushed_flat_scan_served_by_columnar_tier(tmp_path, monkeypatch):
+    from pyspark.sql import datasource as ds
+
+    stats = tmp_path / "stats"
+    stats.mkdir()
+    monkeypatch.setenv(D._TIER_STATS_ENV, str(stats))
+    filters = [ds.GreaterThan(("k",), 17), ds.EqualTo(("name",), "n3")]
+    assert all(
+        D._compile_filter_arrow(f, _ROUTE_SCHEMA, "_corrupt_record")
+        is not None
+        for f in filters
+    )
+    got = _reader_read(
+        tmp_path, _ROUTE_DOC, _ROUTE_SCHEMA, {"rowTag": "r"}, filters
+    )
+    assert got == [
+        {"k": k, "name": "n3", "v": k + 0.5}
+        for k in range(3000)
+        if k > 17 and k % 7 == 3
+    ]
+    tiers = _tier_rows(stats)
+    # the raw-text prefilter drops records without "n3" before the scan
+    assert tiers.get("columnar_flat") == sum(
+        1 for k in range(3000) if k % 7 == 3
+    ), tiers
+    assert not any(t.startswith("row_") and n for t, n in tiers.items())

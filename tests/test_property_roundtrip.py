@@ -421,7 +421,9 @@ def test_strict_and_window_paths_equivalence_property(recs):
 
     # record-based columnar (strict tried first internally)
     col = pa.Table.from_batches(
-        list(D._columnar_flat_batches(iter(recs), _FLAT_SCHEMA, opts, 4))
+        list(D._columnar_batches(
+            (("rec", r) for r in recs), _FLAT_SCHEMA, opts, 4, D._TierTally()
+        ))
     )
     assert col.equals(ref)
 
@@ -435,7 +437,9 @@ def test_strict_and_window_paths_equivalence_property(recs):
         for sp in tok.plan_splits(p, "utf-8", 64):
             yield from tok.scan_split_windows(sp, "r", "utf-8")
 
-    win = list(D._columnar_window_batches(windows(), _FLAT_SCHEMA, opts, 4))
+    win = list(D._columnar_batches(
+        windows(), _FLAT_SCHEMA, opts, 4, D._TierTally()
+    ))
     wt = pa.Table.from_batches(win) if win else ref.slice(0, 0)
     assert wt.equals(ref)
 

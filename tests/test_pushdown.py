@@ -165,7 +165,8 @@ def test_pushdown_columnar_vs_row_paths_agree(spark, tmp_path):
 
     def run(columnar):
         d = read_xml(
-            spark, out, rowTag="row", filterPushdown="true", columnar=columnar
+            spark, out, rowTag="row", filterPushdown="true",
+            arrowBatches=columnar,
         )
         return {
             tuple(r)
@@ -205,7 +206,7 @@ def test_pushdown_not_in_with_null_three_valued(push, tmp_path):
     for columnar in ("true", "false"):
         pushed = read_xml(
             push, out, rowTag="item", schema=schema,
-            filterPushdown="true", columnar=columnar,
+            filterPushdown="true", arrowBatches=columnar,
         )
         cond = ~F.col("v").isin(1, None)
         assert pushed.filter(cond).count() == 0, columnar
@@ -239,7 +240,7 @@ def test_pushdown_not_eqnullsafe_keeps_null_rows(push, tmp_path):
     for columnar in ("true", "false"):
         pushed = read_xml(
             push, out, rowTag="item", schema=schema,
-            filterPushdown="true", columnar=columnar,
+            filterPushdown="true", arrowBatches=columnar,
         )
         got = sorted(map(tuple, pushed.filter(cond).collect()))
         assert got == expected, columnar
