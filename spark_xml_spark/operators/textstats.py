@@ -45,6 +45,10 @@ def token_count_col(col: Column) -> Column:
 # starts one)
 _TOK_CLS = None
 
+# Largest offset of the int32-offset string array the tokenizer emits: the
+# token bytes of one Arrow batch must fit under it.
+_MAX_TOKEN_BYTES = 2**31 - 1
+
 
 def _tok_cls():
     global _TOK_CLS
@@ -103,6 +107,12 @@ def _tokenize_string_array(arr):
     k = _tok_cls()[data]
     keep = k != 0
     cdata = np.ascontiguousarray(data[keep])
+    if len(cdata) > _MAX_TOKEN_BYTES:
+        raise ValueError(
+            f"one Arrow batch holds {len(cdata)} token bytes, more than the "
+            f"{_MAX_TOKEN_BYTES} a string array's int32 offsets can address;"
+            " lower spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
     ck = k[keep]
     csum = np.concatenate(([0], np.cumsum(keep)))
     row_start_c = csum[off]  # n+1 entries, compacted coordinates

@@ -473,6 +473,11 @@ def _struct_fixer(dt: T.DataType):
     return None
 
 
+# Rows per Arrow batch a scan yields: fewer IPC batches and JVM per-batch
+# setups than 4096.
+_ARROW_BATCH_ROWS = 8192
+
+
 def _rows_to_arrow_batches(rows, schema: T.StructType, batch_size: int):
     """Yield pyarrow.RecordBatch objects from row tuples. Raises on the
     FIRST batch if the schema/value shapes don't map — callers fall back to
@@ -656,136 +661,88 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
         return _py_cast_column(vals, caster, target_type)
 
 
-def _transpose_groups(groups, group_map, ncols):
-    """Per-record capture-group tuples -> one list of raw strings per
-    schema field; a field no group feeds is all-null."""
-    gcols = list(zip(*groups))  # C-speed transpose: one tuple per group
-    cols: List[list] = [None] * ncols  # type: ignore[list-item]
-    for g, i, _is_attr in group_map:
-        cols[i] = list(gcols[g - 1])
-    nrec = len(groups)
-    return [[None] * nrec if c is None else c for c in cols]
+def _one_group_per_target(group_map) -> bool:
+    """The columnar assembler needs each column (a field, or a simple
+    struct's attribute subfield) fed by ONE capture group. A duplicated
+    tag in the learning record, or a field captured as both root
+    attribute and element, parses correctly on the row tiers by in-order
+    overwrite but can't be expressed as independent columns — those
+    batches take the row path."""
+    targets = [
+        (i, sub if kind == "attr" else -1) for _g, i, sub, kind in group_map
+    ]
+    return len(targets) == len(set(targets))
 
 
-def _collect_columns(batch, pat, group_map, ncols, strict=None):
+def _collect_columns(batch, fast):
     """Match every record against the learned whole-record pattern and
-    transpose the captured field strings into columns. None when any
-    record needs the real parser (no match, or entity references)."""
+    transpose the captures into one column per capture group. The strict
+    pattern goes first: ~45% faster when every record carries every
+    learned part, with identical captures by construction (see
+    FastFlatParser._compile). None when any record needs the real parser
+    (no match, or entity references)."""
     for rec in batch:
         if "&" in rec:
             return None
-    groups = None
-    if strict is not None:
-        try:
-            # all-fields-required pattern: ~45% faster when every record
-            # carries every probe-observed part (identical captures by
-            # construction — see _compile_seq_pattern)
-            groups = [m.groups() for m in map(strict.match, batch)]
-        except AttributeError:
-            groups = None  # some record diverged: optional pattern decides
-    if groups is None:
+    for pat in (fast.strict_pattern, fast.pattern):
         try:
             # map() drives pat.match in C; a None match (record shape
-            # drifted) raises AttributeError -> whole batch to the row path
-            groups = [m.groups() for m in map(pat.match, batch)]
+            # drifted) raises AttributeError -> next pattern / row path
+            return list(zip(*[m.groups() for m in map(pat.match, batch)]))
         except AttributeError:
-            return None
-    return _transpose_groups(groups, group_map, ncols)
+            pass
+    return None
 
 
-def _collect_group_columns(batch, pat, ngroups):
-    """Match every record against a learned whole-record pattern and
-    transpose ALL capture groups into columns (struct mode: groups map to
-    fields OR struct subfields via the 4-tuple gmap). None when any
-    record needs the real parser."""
-    for rec in batch:
-        if "&" in rec:
-            return None
-    try:
-        groups = [m.groups() for m in map(pat.match, batch)]
-    except AttributeError:  # a None match: whole batch to the row path
-        return None
-    return [list(c) for c in zip(*groups)]
-
-
-def _struct_gmap_columnar_ok(gmap) -> bool:
-    """The columnar assembler needs each (field, sub, kind) target fed by
-    at most ONE group: duplicated tags in the learning record (last-wins
-    row semantics) or a field captured as both element and root attribute
-    can't be expressed as independent columns — those batches take the
-    row path."""
-    seen = set()
-    targets = set()
-    for _g, i, sub, kind in gmap:
-        key = (i, sub, kind)
-        if key in seen:
-            return False
-        seen.add(key)
-        if kind in ("elem", "rootattr"):
-            if i in targets:
-                return False
-            targets.add(i)
-    return True
-
-
-def _assemble_struct_arrays(cols, fast, schema, arrow_schema, guards, nrec):
-    """Capture-group columns -> one Arrow array per schema field, building
-    StructArrays (validity = the vt presence group) for simple-struct
-    fields. Raises like _cast_column on anything unprovable — the caller
-    re-runs the batch through the exact row path."""
+def _assemble(cols, fast, schema, arrow_schema, guards, nrec):
+    """Capture-group columns -> one Arrow array per schema field, each
+    cast with its group kind's cell semantics: element (``elem``),
+    attribute (``rootattr``, ``attr``: an empty value is not
+    null-coerced) or an attribute-only element's body (``vt``: END
+    semantics). Simple-struct fields become StructArrays whose validity is
+    the presence of their body group; a field no group feeds is all-null.
+    None when a Python caster rejected a value (malformed /
+    whitespace-only) — the caller re-runs the batch through the exact row
+    path so the parse-mode policy applies."""
     import pyarrow as pa
 
-    by_field: dict = {}
-    for k, (_g, i, sub, kind) in enumerate(fast.struct_gmap):
-        by_field.setdefault(i, {})[(sub, kind)] = cols[k]
+    fed: dict = {}
+    for g, i, sub, kind in fast.group_map:
+        fed.setdefault(i, []).append((sub, kind, cols[g - 1]))
     arrays = []
-    for i, f in enumerate(schema.fields):
-        at = arrow_schema.field(i).type
-        srcs = by_field.get(i)
-        if isinstance(f.dataType, T.StructType):
-            _nsub, _vt_sub, _attr_sub, subcast = fast.simple_structs[i]
-            vt_raw = None
-            sub_raw = {}
-            if srcs:
-                for (sub, kind), raw in srcs.items():
-                    if kind == "vt":
-                        vt_raw = raw
-                        if sub >= 0:
-                            sub_raw[sub] = ("vt", raw)
-                    elif kind == "attr":
-                        sub_raw[sub] = ("attr", raw)
-            if vt_raw is None:  # struct element not in the learned shape
+    try:
+        for i, f in enumerate(schema.fields):
+            at = arrow_schema.field(i).type
+            srcs = fed.get(i)
+            if srcs is None:
                 arrays.append(pa.nulls(nrec, at))
-                continue
-            children = []
-            for j, sf in enumerate(f.dataType.fields):
-                sat = at.field(j).type
-                src = sub_raw.get(j)
-                if src is None:
-                    children.append(pa.nulls(nrec, sat))
-                    continue
-                skind, raw = src
-                children.append(
-                    _cast_column(
-                        raw, sf.dataType, subcast[j], sat, guards,
-                        is_attr=skind == "attr", vt=skind == "vt",
-                    )
-                )
-            mask = pa.array([v is None for v in vt_raw], pa.bool_())
-            arrays.append(
-                pa.StructArray.from_arrays(children, fields=list(at), mask=mask)
-            )
-        elif srcs is None:
-            arrays.append(pa.nulls(nrec, at))
-        else:
-            (sub, kind), raw = next(iter(srcs.items()))
-            arrays.append(
-                _cast_column(
+            elif i not in fast.simple_structs:
+                ((_sub, kind, raw),) = srcs
+                attr = kind == "rootattr"
+                arrays.append(_cast_column(
                     raw, f.dataType,
-                    (fast.attr_casters if kind == "rootattr" else fast.casters)[i],
-                    at, guards, is_attr=kind == "rootattr",
-                )
-            )
+                    (fast.attr_casters if attr else fast.casters)[i],
+                    at, guards, is_attr=attr,
+                ))
+            else:
+                # a present struct element always captures its body group
+                # (FastFlatParser._compile): that group is its validity
+                (body,) = [raw for _s, kind, raw in srcs if kind == "vt"]
+                mask = pa.array([v is None for v in body], pa.bool_())
+                subcasters = fast.simple_structs[i][3]
+                children = [pa.nulls(nrec, sf.type) for sf in at]
+                for sub, kind, raw in srcs:
+                    if sub >= 0:
+                        children[sub] = _cast_column(
+                            raw, f.dataType.fields[sub].dataType,
+                            subcasters[sub], at.field(sub).type, guards,
+                            is_attr=kind == "attr", vt=kind == "vt",
+                        )
+                arrays.append(pa.StructArray.from_arrays(
+                    children, fields=list(at), mask=mask
+                ))
+    except Exception:
+        return None
     return arrays
 
 
@@ -801,79 +758,6 @@ def _row_batches(batch, schema: T.StructType, xopts: XmlOptions,
     return list(_rows_to_arrow_batches(rows, schema, batch_size))
 
 
-def _columnar_struct_batches(
-    records: Iterator[str], schema: T.StructType, xopts: XmlOptions,
-    batch_size: int, fast, tally: _TierTally,
-):
-    """Struct-mode columnar scan: the generic-verified learned pattern
-    (parser.FastFlatParser struct mode) feeds the Arrow transpose; any
-    batch the pattern or casts can't prove equivalent re-runs through the
-    exact row path."""
-    import itertools
-    from time import perf_counter
-
-    import pyarrow as pa
-
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in schema.fields]
-    )
-    fix = _tz_fixer(schema)
-    guards = _cast_guards(xopts)
-    records = iter(records)
-    while True:
-        batch = list(itertools.islice(records, batch_size))
-        if not batch:
-            return
-        t0 = perf_counter()
-        if fast.struct_pattern is None and fast._struct_learn_attempts < 16:
-            probe = next((r for r in batch if "&" not in r), None)
-            if probe is not None:
-                fast._learn_struct_pattern(probe)
-        pat = fast.struct_pattern
-        arrays = None
-        if pat is not None and _struct_gmap_columnar_ok(fast.struct_gmap):
-            cols = _collect_group_columns(batch, pat, len(fast.struct_gmap))
-            if cols is not None:
-                try:
-                    arrays = _assemble_struct_arrays(
-                        cols, fast, schema, arrow_schema, guards, len(batch)
-                    )
-                except Exception:
-                    pass  # unprovable cast: the batch takes the row path
-        if arrays is None:
-            out = _row_batches(batch, schema, xopts, batch_size, fix)
-            tally.add("row_fallback", len(batch), perf_counter() - t0)
-            yield from out
-            continue
-        tally.add("columnar_struct", len(batch), perf_counter() - t0)
-        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-
-def _cast_ladder(cols, fast, fields, arrow_schema, guards):
-    """The column-cast step of the flat columnar tiers: one Arrow array
-    per schema field via _cast_column, root-attribute columns with
-    attribute semantics. The attribute set is read from the LEARNED
-    group map on every call — it is empty until a pattern is learned.
-    None when a Python caster rejected a value (malformed /
-    whitespace-only) — the caller re-runs the batch through the exact row
-    path so the parse-mode policy applies."""
-    attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
-    try:
-        return [
-            _cast_column(
-                cols[i],
-                fields[i].dataType,
-                (fast.attr_casters if i in attr_cols else fast.casters)[i],
-                arrow_schema.field(i).type,
-                guards,
-                is_attr=i in attr_cols,
-            )
-            for i in range(len(fields))
-        ]
-    except Exception:
-        return None
-
-
 def _columnar_batches(
     items, schema: T.StructType, xopts: XmlOptions, batch_size: int,
     tally: _TierTally,
@@ -881,7 +765,8 @@ def _columnar_batches(
     """The columnar scan: consume tokenizer.scan_split_windows items and
     yield Arrow record batches. Unpushed scans feed it the tokenizer's
     windows; pushed scans feed it ``("rec", record)`` items that passed
-    the raw-text prefilter.
+    the raw-text prefilter. Flat and simple-struct schemas share it: both
+    run FastFlatParser's one learned record pattern.
 
     A clean window runs the learned STRICT whole-record pattern's findall
     straight over its text — no per-record slicing, decoding, or match
@@ -906,33 +791,11 @@ def _columnar_batches(
     import pyarrow as pa
 
     fast = parser.FastFlatParser.try_build(schema, xopts)
-    if fast.simple_structs:
-        yield from _columnar_struct_batches(
-            tokenizer.window_records(items), schema, xopts, batch_size,
-            fast, tally,
-        )
-        return
-    fields = schema.fields
-    ncols = len(fields)
     arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
+        [pa.field(f.name, _arrow_type(f.dataType)) for f in schema.fields]
     )
     fix = _tz_fixer(schema)
     guards = _cast_guards(xopts)
-
-    def learn(probe):
-        try:
-            fast._parse_regex(probe)  # compiles the pattern on success
-        except Exception:
-            pass
-
-    def transposable():
-        # a field fed by several groups (root attr + same-named element,
-        # or a duplicated tag) parses correctly on the row tiers via
-        # in-order overwrite, but the columnar transpose would
-        # double-append its column — those records stay on the row path
-        targets = [i for _g, i, _a in fast.group_map]
-        return len(targets) == len(set(targets))
 
     def emit_records(batch):
         """The per-record ladder, INCLUDING pattern learning: pushed
@@ -941,18 +804,17 @@ def _columnar_batches(
         here, so this must be able to learn the pattern or the scan
         would silently run the row tier forever."""
         t0 = perf_counter()
-        if fast.seq_pattern is None:
+        if fast.pattern is None:
             probe = next((r for r in batch if "&" not in r), None)
             if probe is not None:
-                learn(probe)
+                fast.learn(probe)
         arrays = None
-        if fast.seq_pattern is not None and transposable():
-            cols = _collect_columns(
-                batch, fast.seq_pattern, fast.group_map, ncols,
-                strict=fast.strict_seq_pattern,
-            )
+        if fast.pattern is not None and _one_group_per_target(fast.group_map):
+            cols = _collect_columns(batch, fast)
             if cols is not None:
-                arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards)
+                arrays = _assemble(
+                    cols, fast, schema, arrow_schema, guards, len(batch)
+                )
         if arrays is not None:
             tally.add("columnar_flat", len(batch), perf_counter() - t0)
             return [pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)]
@@ -964,27 +826,29 @@ def _columnar_batches(
         """Strict window captures -> one Arrow batch; a cast failure
         re-slices the records and uses the per-record ladder."""
         t0 = perf_counter()
-        cols = _transpose_groups(groups, fast.group_map, ncols)
-        arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards)
+        arrays = _assemble(
+            list(zip(*groups)), fast, schema, arrow_schema, guards,
+            len(groups),
+        )
         if arrays is None:
             return emit_records([t[s:e] for t, s, e in refs])
         tally.add("columnar_window", len(groups), perf_counter() - t0)
         return [pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)]
 
-    learn_attempts = 0
-
     def window_groups(text, spans):
         """The strict findall's group tuples for a clean window, one per
         span; None when the window must take the per-record ladder."""
-        nonlocal learn_attempts
-        if fast.seq_pattern is None and learn_attempts < 16:
+        if fast.pattern is None and fast.learn_attempts < 16:
             s0, e0 = spans[0]
             probe = text[s0:e0]
             if "&" not in probe:
-                learn_attempts += 1
-                learn(probe)
+                fast.learn(probe)
         wp = fast.strict_window_pattern
-        if wp is None or "&" in text or not transposable():
+        if (
+            wp is None
+            or "&" in text
+            or not _one_group_per_target(fast.group_map)
+        ):
             return None
         t0 = perf_counter()
         found = wp.findall(text)
@@ -1545,10 +1409,7 @@ class XmlReader(DataSourceReader):
         if arrow_flag == "false":
             yield from _counted(rows, tally, "row_tuple")
             return
-        batch_size = int(
-            get_option(self._opts_dict, "arrowBatchSize")
-            or 8192  # fewer IPC batches & JVM per-batch setups than 4096
-        )
+        batch_size = _ARROW_BATCH_ROWS
         if _columnar_ok(dschema, xopts):
             # Columnar fast path: record batches go straight from matched
             # field strings to Arrow arrays with C-level casts; any batch

@@ -410,51 +410,38 @@ def _columnar_infer_ok(options: XmlOptions) -> bool:
 
 
 def _learn_seq_pattern(xml: str, options: XmlOptions):
-    """Whole-record pattern with one capture group per top-level tag (and
-    per ROOT ATTRIBUTE, as ``attributePrefix``-prefixed field names) of a
-    proven-flat record (same structural proof as the parser's tier 1), or
-    None. Groups are ordered; the field-name list is returned alongside.
-    Attribute "" infers NullType exactly like an empty element
-    (infer_from('') is NullType), so attr columns reuse the same column
-    typer."""
-    from spark_xml_spark.xmlcore.parser import (
-        _ATTR_PAIR,
-        _FLAT_DISQUALIFIER,
-        _FLAT_FIELD,
-        _ROOT_OPEN_ATTRS,
-    )
+    """Whole-record pattern with one capture group per top-level child
+    (and per ROOT ATTRIBUTE, as ``attributePrefix``-prefixed field names)
+    of a flat record, or None. Groups are ordered; the field-name list is
+    returned alongside. The record is walked with the parser's
+    ``walk_children``; children with attributes, repeated names, and root
+    attributes under ``excludeAttribute`` are rejected (those infer
+    differently on the event path). Attribute "" infers NullType exactly
+    like an empty element (infer_from('') is NullType), so attr columns
+    reuse the same column typer."""
+    from spark_xml_spark.xmlcore.parser import _ATTR_PAIR, walk_children
 
-    m = _ROOT_OPEN_ATTRS.match(xml)
-    if m is None:
+    walked = walk_children(xml)
+    if walked is None:
         return None
-    root = m.group(1)
-    attrs: List[tuple] = []
-    body = xml
-    extra_lt = 2
-    if m.group(2):
-        if options.exclude_attribute:
-            return None  # the event path drops attributes: stay exact
-        attrs = [
-            (am.group(1), '"' if am.group(2) is not None else "'")
-            for am in _ATTR_PAIR.finditer(m.group(2))
-        ]
-        body = xml[m.end():]
-        extra_lt = 1
-        if _FLAT_DISQUALIFIER.search(body):
-            return None
-    elif _FLAT_DISQUALIFIER.search(xml):
-        return None
-    fields = _FLAT_FIELD.findall(body)
-    if (not fields and not attrs) or body.count("<") != extra_lt + 2 * len(fields):
-        return None
-    if not body.rstrip().endswith(f"</{root}>"):
+    root_m, children = walked
+    root = root_m.group(1)
+    if any(cm.group(2) for cm in children):
+        return None  # a child with attributes infers as a struct
+    if root_m.group(2) and options.exclude_attribute:
+        return None  # the event path drops attributes: stay exact
+    attrs = [
+        (am.group(1), '"' if am.group(2) is not None else "'")
+        for am in _ATTR_PAIR.finditer(root_m.group(2))
+    ]
+    if not children and not attrs:
         return None
 
     def local(n: str) -> str:
         return n.split(":")[-1] if options.ignore_namespace else n
 
     names = [options.attribute_prefix + local(a) for a, _q in attrs] + [
-        local(t) for t, _ in fields
+        local(cm.group(1)) for cm in children
     ]
     if len(set(names)) != len(names):
         return None  # repeated tag -> ArrayType (or name clash): exact path
@@ -463,8 +450,8 @@ def _learn_seq_pattern(xml: str, options: XmlOptions):
         esc = _re_inf.escape(a)
         parts.append(f"(?:\\s+{esc}={q}([^{q}<]*){q})?")
     parts.append("\\s*>")
-    for tag, _ in fields:
-        esc = _re_inf.escape(tag)
+    for cm in children:
+        esc = _re_inf.escape(cm.group(1))
         parts.append(f"(?:\\s*<{esc}>([^<]*)</{esc}>)?")
     parts.append("\\s*</")
     parts.append(_re_inf.escape(root))
@@ -537,8 +524,6 @@ def _columnar_fold(records: Iterable[str], options: XmlOptions, fast) -> T.DataT
     through the exact per-record path. Inference folds are commutative, so
     batching does not change the result."""
     import itertools
-
-    from spark_xml_spark.xmlcore.parser import _FLAT_DISQUALIFIER
 
     merged: T.DataType = T.StructType([])
     pat = None

@@ -369,34 +369,68 @@ _ATTR_PAIR = _re.compile(r"([^\s=>/]+)=(?:\"([^\"<]*)\"|'([^'<]*)')")
 # Attribute-free root open tag (the '=' disqualifier already proved there
 # are no attributes anywhere in the record).
 _ROOT_OPEN_PLAIN = _re.compile(r"\s*<([A-Za-z_:][^\s>/=]*)\s*>")
-# One child element with optional attributes and text-only body, used by
-# the struct-mode pattern compiler to walk a record's top-level children.
+# One top-level child: optional attributes and a text-only body. The name
+# class keeps '<!' (comments, CDATA) and '<?' (PIs) from ever matching.
 _CHILD_ELEM = _re.compile(
-    r"\s*<([A-Za-z_:][^\s>/=]*)"
-    r"((?:\s+[^\s=>/]+=(?:\"[^\"<]*\"|'[^'<]*'))*)\s*>([^<]*)</\1\s*>"
+    r"\s*<([^\s<>/=!?][^\s<>/=]*)"
+    r"((?:\s+[^\s=>/]+=(?:\"[^\"<]*\"|'[^'<]*'))*)>([^<]*)</\1>"
 )
 
 
+def walk_children(xml: str):
+    """``(root open-tag match, [child matches])`` when ``xml`` is one root
+    element whose children all match _CHILD_ELEM, with only whitespace
+    between them and around the root's close tag; None otherwise (nested
+    elements, mixed text, comments, self-closing tags). Entity references
+    are the caller's check."""
+    root_m = _ROOT_OPEN_ATTRS.match(xml)
+    if root_m is None:
+        return None
+    children = []
+    pos = root_m.end()
+    cm = _CHILD_ELEM.match(xml, pos)
+    while cm is not None:
+        children.append(cm)
+        pos = cm.end()
+        cm = _CHILD_ELEM.match(xml, pos)
+    if xml[pos:].strip() != f"</{root_m.group(1)}>":
+        return None
+    return root_m, children
+
+
 class FastFlatParser:
-    """Specialized parser for FLAT all-scalar schemas (no structs, arrays,
-    maps, valueTag, or wildcard). Attribute-prefixed fields are supported
-    when they name ROOT-element attributes (the only flat-scalar shape an
-    attribute can produce — a child element with attributes infers as a
-    struct and is rejected above).
+    """Specialized parser for one-level schemas: scalar fields (child
+    elements, or ROOT attributes via ``attributePrefix`` names),
+    repeated-tag scalar arrays, and "simple structs" — attribute-only
+    child elements such as ``<price prio="X">12.3</price>``, whose
+    subfields are the valueTag and attributes. No maps, nested structs,
+    valueTag or wildcard at the top level, and no struct+array mix.
 
-    Two tiers, both falling back to the generic parser on ANY anomaly so
-    the parse-mode policy and partial-row behavior are always the generic
-    path's:
+    Three tiers; every anomaly falls through to the next and finally to
+    the generic parser, so the parse-mode policy and partial-row behavior
+    are always the generic path's:
 
-    1. regex tier: one C-speed ``findall`` of ``<tag>text</tag>`` over the
-       record. Valid only when the record has no entities, CDATA,
-       comments, PIs, self-closing tags, or attributes outside the root
-       open tag (single pre-scan), and the total ``<`` count proves every
-       element was matched at field depth (nested levels or malformed tags
-       break the arithmetic and drop to tier 2). ~10x over per-event
-       Python callbacks.
-    2. expat tier: callbacks fill the row directly, skipping the generic
-       event-list machinery (~2x).
+    0. learned record pattern: ``learn`` compiles one whole-record regex
+       from a record's root attributes and children (``_compile``), with
+       one capture group per target in the 4-tuple group map
+       ``(group, field, sub, kind)`` — kinds ``elem``, ``rootattr``,
+       ``attr`` (struct attribute) and ``vt`` (struct body) — and adopts
+       it only when its row equals the generic parse of that record.
+       Every child is optional, so null-elided records still match;
+       reordered ones fall through. The columnar scan
+       (sources/datasource) runs the same pattern over whole batches.
+    1. regex tier (flat and scalar-array schemas): one C-speed
+       ``findall`` of ``<tag>text</tag>`` over the record. Valid only when
+       the record has no entities, CDATA, comments, PIs, self-closing
+       tags, or attributes outside the root open tag (single pre-scan),
+       and the total ``<`` count proves every element was matched at
+       field depth (nested levels or malformed tags break the arithmetic
+       and drop to tier 2).
+    2. expat tier (flat and scalar-array schemas): callbacks fill the row
+       directly, skipping the generic event-list machinery.
+
+    Struct schemas have tier 0 only: a record it can't match raises
+    _FastFallback and takes the generic parser.
 
     Casts are hoisted per field at build time (same code paths as
     ``cast_to``, specialized for the scalar types; anything unusual
@@ -407,11 +441,9 @@ class FastFlatParser:
 
     __slots__ = (
         "schema", "options", "index", "types", "is_string", "n", "strip_ns",
-        "casters", "seq_pattern", "strict_seq_pattern",
-        "strict_window_pattern", "group_map",
-        "attr_index", "attr_casters",
-        "simple_structs", "struct_pattern", "struct_gmap",
-        "_struct_learn_attempts", "array_fields",
+        "casters", "attr_index", "attr_casters", "simple_structs",
+        "array_fields", "pattern", "strict_pattern",
+        "strict_window_pattern", "group_map", "learn_attempts",
     )
 
     @classmethod
@@ -499,23 +531,15 @@ class FastFlatParser:
         self.attr_casters = [
             self._build_attr_caster(f.dataType) for f in schema.fields
         ]
-        # Tier-0 whole-record pattern, learned from the first clean record:
-        # one C-speed match with a capturing group per schema field in the
-        # record's observed attr+tag order (every field optional — null
-        # elision drops tags). Records in a different order fall to tier 1.
-        self.seq_pattern = None
-        self.strict_seq_pattern = None
-        self.strict_window_pattern = None
-        self.group_map: List[tuple] = []
         # Simple-struct fields (attribute-only elements): field index ->
-        # (n_sub, vt_sub_index|None, {bare attr name: sub index},
+        # (n_sub, vt_sub_index|-1, {bare attr name: sub index},
         #  [per-sub caster]). Element cell semantics for the valueTag sub,
         # attribute semantics for attr subs.
         self.simple_structs = {}
         for i, f in enumerate(schema.fields):
             if not isinstance(f.dataType, T.StructType):
                 continue
-            vt_sub = None
+            vt_sub = -1
             attr_sub = {}
             sub_casters = []
             for j, sf in enumerate(f.dataType.fields):
@@ -534,11 +558,13 @@ class FastFlatParser:
             self.simple_structs[i] = (
                 len(f.dataType.fields), vt_sub, attr_sub, sub_casters
             )
-        # struct-mode tier-0: pattern + 4-tuple group map, learned from the
-        # first record whose pattern-parse EQUALS the generic parse
-        self.struct_pattern = None
-        self.struct_gmap: List[tuple] = []
-        self._struct_learn_attempts = 0
+        # Tier 0, set by learn(): the optional, strict and strict-window
+        # patterns and their group map (see _compile)
+        self.pattern = None
+        self.strict_pattern = None
+        self.strict_window_pattern = None
+        self.group_map: List[tuple] = []
+        self.learn_attempts = 0
 
     def _build_caster(self, dt: T.DataType):
         """Per-field CELL converter: the empty/whitespace element semantics
@@ -679,31 +705,22 @@ class FastFlatParser:
         return c_vt
 
     def parse(self, xml: str) -> tuple:
+        if "&" not in xml:  # entities need real unescaping
+            if self.pattern is None and self.learn_attempts < 16:
+                self.learn(xml)
+            m = self.pattern and self.pattern.match(xml)
+            if m:
+                return self._row_from_match(m, self.group_map)
+            if not self.simple_structs:
+                row = self._parse_regex(xml)
+                if row is not None:
+                    return row
         if self.simple_structs:
-            return self._parse_struct_mode(xml)
-        # entities need real unescaping -> straight to expat
-        if "&" in xml:
-            return self._parse_expat(xml)
-        pat = self.seq_pattern
-        if pat is not None:
-            m = pat.match(xml)
-            if m is not None:
-                row: List[Any] = [None] * self.n
-                casters = self.casters
-                attr_casters = self.attr_casters
-                for g, i, is_attr in self.group_map:
-                    text = m.group(g)
-                    if text is not None:
-                        row[i] = (attr_casters if is_attr else casters)[i](text)
-                return tuple(row)
-        row = self._parse_regex(xml)
-        if row is not None:
-            return row
+            raise _FastFallback()  # tier 0 only: the generic parser decides
         return self._parse_expat(xml)
 
     def _parse_regex(self, xml: str):
-        """Tier-1 extraction; None when the record needs a real parser.
-        The first success also compiles the tier-0 whole-record pattern."""
+        """Tier-1 extraction; None when the record needs a real parser."""
         attrs: list = []
         body = xml
         body_extra_lt = 2  # '<' of root open + close tags
@@ -771,229 +788,139 @@ class FastFlatParser:
                         row[i] = [v]
                 else:
                     row[i] = casters[i](text)
-        if self.seq_pattern is None and not arrays:
-            # variable occurrence counts are inexpressible in the fixed
-            # tier-0 pattern; array schemas stay on tier 1/2
-            self._compile_seq_pattern(xml, [t for t, _ in fields])
         return tuple(row)
 
-    def _compile_seq_pattern(self, xml: str, tags: List[str]) -> None:
-        root_m = _ROOT_OPEN_ATTRS.match(xml)
-        if root_m is None:
-            self.seq_pattern = None
-            return
-        parts = ["\\s*<", _re.escape(root_m.group(1))]
-        # strict variant: every probe-observed part REQUIRED and no
-        # inter-tag whitespace (the dominant machine-generated shape) — the
-        # regex engine skips both the per-part optionality branch and the
-        # \s* scans, ~2x faster than the optional pattern. A strict match
-        # produces byte-identical captures to the optional pattern (same
-        # groups, same order, sequential-greedy over the same parts), so
-        # the columnar path tries strict on the whole batch first and falls
-        # back to the optional pattern when any record diverges (null-
-        # elided field, extra attr, reordering, indentation).
-        strict_parts = ["<", _re.escape(root_m.group(1))]
-        gmap: List[tuple] = []
-        g = 0
-        # A field CAN be captured by several groups (a root attr plus a
-        # same-named element, or a duplicated tag): the parse loop applies
-        # groups in document order and only overwrites on a non-None
-        # capture, which reproduces convert_object's attrs-first,
-        # present-elements-overwrite semantics. (An earlier version
-        # suppressed the attr capture when an element targeted the same
-        # field — that silently NULLed the attribute whenever a later
-        # record had the attribute but not the element.) The columnar
-        # transpose cannot express multi-group fields and skips the
-        # pattern when group_map has duplicate targets.
-        for am in _ATTR_PAIR.finditer(root_m.group(2)):
-            name = am.group(1)
-            q = '"' if am.group(2) is not None else "'"
-            esc = _re.escape(name)
-            base = (
-                name.rsplit(":", 1)[-1] if self.strip_ns and ":" in name else name
-            )
-            i = self.attr_index.get(base, -1)
-            if i >= 0:
-                g += 1
-                gmap.append((g, i, True))
-                parts.append(f"(?:\\s+{esc}={q}([^{q}<]*){q})?")
-                strict_parts.append(f"\\s+{esc}={q}([^{q}<]*){q}")
-            else:
-                parts.append(f"(?:\\s+{esc}={q}[^{q}<]*{q})?")
-                strict_parts.append(f"\\s+{esc}={q}[^{q}<]*{q}")
-        parts.append("\\s*>")
-        strict_parts.append(">")
-        for tag in tags:
-            name = tag.rsplit(":", 1)[-1] if self.strip_ns and ":" in tag else tag
-            i = self.index.get(name, -1)
-            esc = _re.escape(tag)
-            if i >= 0:
-                g += 1
-                gmap.append((g, i, False))
-                parts.append(f"(?:\\s*<{esc}>([^<]*)</{esc}>)?")
-                strict_parts.append(f"<{esc}>([^<]*)</{esc}>")
-            else:
-                parts.append(f"(?:\\s*<{esc}>[^<]*</{esc}>)?")
-                strict_parts.append(f"<{esc}>[^<]*</{esc}>")
-        parts.extend(["\\s*</", _re.escape(root_m.group(1)), ">\\s*\\Z"])
-        strict_parts.extend(["</", _re.escape(root_m.group(1)), ">\\Z"])
+    def learn(self, xml: str) -> bool:
+        """Compile the tier-0 patterns from ``xml`` and adopt them only
+        when their row for ``xml`` equals the generic parser's, so a
+        mis-learned shape never ships rows. Array schemas never adopt one:
+        variable occurrence counts are inexpressible in a fixed pattern."""
+        self.learn_attempts += 1
+        if self.array_fields or "&" in xml:
+            return False
+        compiled = self._compile(xml)
+        m = compiled and compiled[0].match(xml)
+        if not m:
+            return False
         try:
-            self.seq_pattern = _re.compile("".join(parts))
-            self.group_map = gmap
-        except _re.error:
-            self.seq_pattern = None
-            return
-        try:
-            self.strict_seq_pattern = _re.compile("".join(strict_parts))
-            # unanchored variant for window-level findall (datasource fused
-            # scan): strict has NO optional groups, so every findall tuple
-            # has all groups participating — no None-vs-'' ambiguity — and
-            # [^<]* fields + literal tags confine a match to one record
-            self.strict_window_pattern = _re.compile(
-                "".join(strict_parts[:-1]) + ">"  # drop only the \Z anchor
-            )
-        except _re.error:
-            self.strict_seq_pattern = None
-            self.strict_window_pattern = None
-
-    # -- struct mode (simple-struct fields present) ------------------------
-    # Tier-1/expat can't represent attribute-only child elements, so this
-    # mode is tier-0-only: a whole-record pattern learned from the first
-    # record whose pattern-parse EQUALS the generic parse (adoption gated
-    # on that equality, so a mis-learned shape can never ship rows).
-    # Records the pattern can't match raise _FastFallback, which
-    # parse_record turns into an exact generic parse.
-
-    def _parse_struct_mode(self, xml: str) -> tuple:
-        if "&" in xml:
-            raise _FastFallback()
-        pat = self.struct_pattern
-        if pat is None:
-            if self._struct_learn_attempts >= 16:
-                raise _FastFallback()
-            self._learn_struct_pattern(xml)
-            pat = self.struct_pattern
-            if pat is None:
-                raise _FastFallback()
-        m = pat.match(xml)
-        if m is None:
-            raise _FastFallback()
-        return self._struct_row_from_match(m)
-
-    def _learn_struct_pattern(self, xml: str) -> None:
-        self._struct_learn_attempts += 1
-        pat, gmap = self._compile_struct_pattern(xml)
-        if pat is None:
-            return
-        m = pat.match(xml)
-        if m is None:
-            return
-        try:
-            save_pat, save_map = self.struct_pattern, self.struct_gmap
-            self.struct_pattern, self.struct_gmap = pat, gmap
-            fast_row = self._struct_row_from_match(m)
-        except Exception:
-            self.struct_pattern, self.struct_gmap = save_pat, save_map
-            return
-        try:
+            fast_row = self._row_from_match(m, compiled[3])
             stream = ev.filtered_reader(xml)
             root_attributes = ev.gather_root_attributes(stream)
             gen_row = convert_object(
                 stream, self.schema, self.options, root_attributes
             )
         except Exception:
-            self.struct_pattern, self.struct_gmap = save_pat, save_map
-            return
+            return False
         if fast_row != gen_row:
-            self.struct_pattern, self.struct_gmap = save_pat, save_map
+            return False
+        (self.pattern, self.strict_pattern, self.strict_window_pattern,
+         self.group_map) = compiled
+        return True
 
-    def _compile_struct_pattern(self, xml: str):
-        m = _ROOT_OPEN_ATTRS.match(xml)
-        if m is None:
-            return None, None
-        root = m.group(1)
-        parts = ["\\s*<", _re.escape(root)]
-        gmap: List[tuple] = []
-        g = 0
-        for am in _ATTR_PAIR.finditer(m.group(2)):
-            name = am.group(1)
-            q = '"' if am.group(2) is not None else "'"
-            esc = _re.escape(name)
-            base = (
-                name.rsplit(":", 1)[-1] if self.strip_ns and ":" in name else name
-            )
-            i = self.attr_index.get(base, -1)
-            if i >= 0:
-                g += 1
-                gmap.append((g, i, -1, "rootattr"))
-                parts.append(f"(?:\\s+{esc}={q}([^{q}<]*){q})?")
-            else:
-                parts.append(f"(?:\\s+{esc}={q}[^{q}<]*{q})?")
-        parts.append("\\s*>")
-        skip_attrs = r"(?:\s+[^\s=>/]+=(?:\"[^\"<]*\"|'[^'<]*'))*"
-        pos = m.end()
-        while True:
-            cm = _CHILD_ELEM.match(xml, pos)
-            if cm is None:
-                break
-            pos = cm.end()
+    def _local(self, name: str) -> str:
+        return name.rsplit(":", 1)[-1] if self.strip_ns and ":" in name else name
+
+    def _compile(self, xml: str):
+        """``(optional, strict, strict_window, group_map)`` for the record
+        shape of ``xml``, or None when it is not a root of text-only
+        children (walk_children).
+
+        The optional pattern makes every root attribute and child
+        optional, with free whitespace between parts. The strict variant
+        REQUIRES every observed part, with no whitespace between tags (the
+        dominant machine-generated shape): the regex engine skips the
+        per-part optionality branch and the whitespace scans, ~2x faster. A
+        strict match yields byte-identical captures to the optional
+        pattern (same groups, same order, sequential-greedy over the same
+        parts), so the columnar scan tries strict on a whole batch first
+        and falls back to optional when any record diverges (null-elided
+        child, extra attribute, reordering, indentation). The window
+        variant is strict without the end anchor, for findall over a
+        window of records: it has no optional groups, so every findall
+        tuple has all groups participating (no None-vs-'' ambiguity), and
+        [^<]* bodies plus literal tags confine a match to one record.
+
+        Group map entries are ``(group, field, sub, kind)`` in document
+        order. A target CAN be captured by several groups (a root attr
+        plus a same-named element, or a duplicated tag):
+        ``_row_from_match`` applies them in order and only overwrites on
+        a non-None capture, which reproduces convert_object's attrs-first,
+        present-elements-overwrite semantics. The columnar scan cannot
+        express multi-group targets and sends such batches to the row
+        path."""
+        walked = walk_children(xml)
+        if walked is None:
+            return None
+        root_m, children = walked
+        targets: List[tuple] = []
+
+        def attr_parts(blob: str, index: dict):
+            # captured when the bare name is in ``index``; returns the
+            # optional and strict parts and the captured index values
+            opt, strict, caught = [], [], []
+            for am in _ATTR_PAIR.finditer(blob):
+                name = am.group(1)
+                q = '"' if am.group(2) is not None else "'"
+                j = index.get(self._local(name), -1)
+                val = f"[^{q}<]*"
+                if j >= 0:
+                    caught.append(j)
+                    val = f"({val})"
+                part = f"\\s+{_re.escape(name)}={q}{val}{q}"
+                opt.append(f"(?:{part})?")
+                strict.append(part)
+            return "".join(opt), "".join(strict), caught
+
+        root = _re.escape(root_m.group(1))
+        a_opt, a_strict, caught = attr_parts(root_m.group(2), self.attr_index)
+        targets += [(i, -1, "rootattr") for i in caught]
+        opt = ["\\s*<", root, a_opt, "\\s*>"]
+        strict = ["<", root, a_strict, ">"]
+        for cm in children:
             tag = cm.group(1)
-            name = tag.rsplit(":", 1)[-1] if self.strip_ns and ":" in tag else tag
-            i = self.index.get(name, -1)
-            esc = _re.escape(tag)
-            meta = self.simple_structs.get(i)
-            if meta is not None:
-                _nsub, vt_sub, attr_sub, _sc = meta
-                parts.append(f"(?:\\s*<{esc}")
-                for am in _ATTR_PAIR.finditer(cm.group(2)):
-                    an = am.group(1)
-                    q = '"' if am.group(2) is not None else "'"
-                    aesc = _re.escape(an)
-                    abase = (
-                        an.rsplit(":", 1)[-1]
-                        if self.strip_ns and ":" in an
-                        else an
-                    )
-                    j = attr_sub.get(abase, -1)
-                    if j >= 0:
-                        g += 1
-                        gmap.append((g, i, j, "attr"))
-                        parts.append(f"(?:\\s+{aesc}={q}([^{q}<]*){q})?")
-                    else:
-                        parts.append(f"(?:\\s+{aesc}={q}[^{q}<]*{q})?")
-                g += 1
-                gmap.append((g, i, vt_sub if vt_sub is not None else -1, "vt"))
-                parts.append(f"\\s*>([^<]*)</{esc}\\s*>)?")
+            i = self.index.get(self._local(tag), -1)
+            struct = self.simple_structs.get(i)
+            a_opt, a_strict, caught = attr_parts(
+                cm.group(2), struct[2] if struct else {}
+            )
+            targets += [(i, j, "attr") for j in caught]
+            body = "[^<]*"
+            if struct is not None:
+                # always captured: a struct's presence is its body group
+                targets.append((i, struct[1], "vt"))
+                body = "([^<]*)"
             elif i >= 0:
-                # scalar field: the generic path ignores attributes on a
-                # scalar-typed child, so consume them non-capturing
-                g += 1
-                gmap.append((g, i, -1, "elem"))
-                parts.append(
-                    f"(?:\\s*<{esc}{skip_attrs}\\s*>([^<]*)</{esc}\\s*>)?"
-                )
-            else:
-                parts.append(
-                    f"(?:\\s*<{esc}{skip_attrs}\\s*>[^<]*</{esc}\\s*>)?"
-                )
-        if _re.match(r"\s*</" + _re.escape(root) + r"\s*>\s*\Z", xml[pos:]) is None:
-            return None, None
-        parts.append("\\s*</" + _re.escape(root) + "\\s*>\\s*\\Z")
+                # attributes on a scalar child are ignored, as in the
+                # generic parser
+                targets.append((i, -1, "elem"))
+                body = "([^<]*)"
+            esc = _re.escape(tag)
+            opt.append(f"(?:\\s*<{esc}{a_opt}>{body}</{esc}>)?")
+            strict.append(f"<{esc}{a_strict}>{body}</{esc}>")
+        opt.append(f"\\s*</{root}>\\s*\\Z")
+        strict.append(f"</{root}>")
+        window = "".join(strict)
         try:
-            return _re.compile("".join(parts)), gmap
+            return (
+                _re.compile("".join(opt)),
+                _re.compile(window + "\\Z"),
+                _re.compile(window),
+                [(g, *t) for g, t in enumerate(targets, 1)],
+            )
         except _re.error:
-            return None, None
+            return None
 
-    def _struct_row_from_match(self, m) -> tuple:
+    def _row_from_match(self, m, group_map) -> tuple:
         row: List[Any] = [None] * self.n
         pending: dict = {}
         structs = self.simple_structs
         casters = self.casters
         attr_casters = self.attr_casters
+        vals = m.groups()
         # document order: root attrs first, then children; a later
         # occurrence of the same target overwrites (convert_object order)
-        for g, i, sub, kind in self.struct_gmap:
-            v = m.group(g)
+        for g, i, sub, kind in group_map:
+            v = vals[g - 1]
             if kind == "elem":
                 if v is not None:
                     row[i] = casters[i](v)
@@ -1017,6 +944,7 @@ class FastFlatParser:
                 if v is not None:
                     row[i] = attr_casters[i](v)
         return tuple(row)
+
 
     def _parse_expat(self, xml: str) -> tuple:
         from xml.parsers import expat

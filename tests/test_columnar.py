@@ -652,3 +652,26 @@ def test_arrow_pushed_flat_scan_served_by_columnar_tier(tmp_path, monkeypatch):
         1 for k in range(3000) if k % 7 == 3
     ), tiers
     assert not any(t.startswith("row_") and n for t, n in tiers.items())
+
+
+def test_simple_struct_scan_served_by_columnar_tier(tmp_path, monkeypatch):
+    """Attribute-only struct children (quote-bearing, so every record
+    takes the per-record ladder) are served by the learned record
+    pattern, never by the row tiers."""
+    stats = tmp_path / "stats"
+    stats.mkdir()
+    monkeypatch.setenv(D._TIER_STATS_ENV, str(stats))
+    doc = "<root>" + "".join(
+        f'<order><okey>{k}</okey><price prio="P{k % 3}">{k}.25</price>'
+        f"<note>n{k}</note></order>"
+        for k in range(3000)
+    ) + "</root>"
+    got = _reader_read(tmp_path, doc, VT_SCHEMA, {"rowTag": "order"})
+    assert got[:2] == [
+        {"okey": 0, "price": {"_VALUE": 0.25, "_prio": "P0"}, "note": "n0"},
+        {"okey": 1, "price": {"_VALUE": 1.25, "_prio": "P1"}, "note": "n1"},
+    ]
+    assert len(got) == 3000
+    tiers = _tier_rows(stats)
+    assert sum(n for t, n in tiers.items() if t.startswith("columnar")) == 3000
+    assert not any(t.startswith("row_") and n for t, n in tiers.items())

@@ -4810,23 +4810,13 @@ def test_bm25_topk_edge_contracts(spark):
     assert len({round(r.score, 6) for r in out2}) == 1
 
 
-def test_arrow_tokenizer_matches_regex_bytewise():
-    # the r17 vectorized tokenizer must reproduce
-    # regexp_extract_all(text, TOKEN_REGEX) byte-for-byte for ANY valid
-    # UTF-8 input — ASCII runs, Unicode single-char "other" matches,
-    # Java-\s-only whitespace (NBSP is a token), empty/null rows, and
-    # non-zero Arrow array offsets (sliced batches)
+def _tokenizer_cases():
+    """Inputs for the vectorized tokenizer: ASCII runs, Unicode
+    single-char "other" matches, Java-\\s-only whitespace (NBSP is a
+    token), empty/null rows, and long runs."""
     import random
-    import re
     import string
 
-    import pyarrow as pa
-
-    from spark_xml_spark.operators.textstats import (
-        _tokenize_string_array,
-    )
-
-    pat = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0B\f\r]")
     cases = [
         "hello world", "abc123def", "a!b", "!!", "", "   ", None,
         "Hello, WORLD!  123\tx\ny", "naïve café — déjà-vu",
@@ -4843,6 +4833,21 @@ def test_arrow_tokenizer_matches_regex_bytewise():
         "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 60)))
         for _ in range(200)
     ]
+    return cases
+
+
+def _assert_tokens_match_regex(cases):
+    """_tokenize_string_array over ``cases`` (whole, and as a sliced
+    array with a non-zero offset) equals findall of TOKEN_REGEX per row."""
+    import re
+
+    import pyarrow as pa
+
+    from spark_xml_spark.operators.textstats import (
+        _tokenize_string_array,
+    )
+
+    pat = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0B\f\r]")
     arr = pa.array(cases, type=pa.string())
     for test_arr, base in ((arr, 0), (arr.slice(3, 150), 3)):
         doc_idx, terms = _tokenize_string_array(test_arr)
@@ -4854,6 +4859,48 @@ def test_arrow_tokenizer_matches_regex_bytewise():
             assert got.get(j, []) == (pat.findall(s) if s else []), (
                 f"row {base + j}: {s!r}"
             )
+
+
+def test_arrow_tokenizer_matches_regex_bytewise():
+    # the r17 vectorized tokenizer must reproduce
+    # regexp_extract_all(text, TOKEN_REGEX) byte-for-byte for ANY valid
+    # UTF-8 input — ASCII runs, Unicode single-char "other" matches,
+    # Java-\s-only whitespace (NBSP is a token), empty/null rows, and
+    # non-zero Arrow array offsets (sliced batches)
+    _assert_tokens_match_regex(_tokenizer_cases())
+
+
+def _token_bytes(cases):
+    # non-whitespace UTF-8 bytes: the tokenizer's compacted data buffer
+    return sum(
+        len("".join(c for c in s if c not in " \t\n\x0b\f\r").encode())
+        for s in cases
+        if s
+    )
+
+
+def test_arrow_tokenizer_batch_at_offset_limit_matches_regex(monkeypatch):
+    # a batch whose token bytes exactly reach the int32 offset limit is
+    # still tokenized exactly
+    from spark_xml_spark.operators import textstats
+
+    cases = _tokenizer_cases()
+    monkeypatch.setattr(textstats, "_MAX_TOKEN_BYTES", _token_bytes(cases))
+    _assert_tokens_match_regex(cases)
+
+
+def test_arrow_tokenizer_rejects_batch_over_offset_limit(monkeypatch):
+    # one byte past the limit the int32 offsets would wrap: raise,
+    # naming the batch's byte count, instead of emitting corrupt tokens
+    import pyarrow as pa
+
+    from spark_xml_spark.operators import textstats
+
+    cases = _tokenizer_cases()
+    n = _token_bytes(cases)
+    monkeypatch.setattr(textstats, "_MAX_TOKEN_BYTES", n - 1)
+    with pytest.raises(ValueError, match=f"holds {n} token bytes"):
+        textstats._tokenize_string_array(pa.array(cases, type=pa.string()))
 
 
 def test_token_tf_arrow_partials_sum_to_counts(spark):
