@@ -477,6 +477,8 @@ class XmlStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: XmlStreamPartition) -> Iterator[tuple]:
+        from spark_xml_spark.sources.datasource import _tz_fixer
+
         xopts = XmlOptions.from_dict(self._opts_dict)
 
         def _rows():
@@ -493,8 +495,11 @@ class XmlStreamReader(DataSourceStreamReader):
                 else:
                     dschema, pv = self._schema, ()
                 records = tokenizer.scan_split(split, xopts.row_tag, xopts.charset)
+                # same UTC pinning as the batch reader: a naive datetime
+                # would be read in the worker's local zone on its way in
+                fix = _tz_fixer(dschema)
                 for row in parser.parse_records(records, dschema, xopts):
-                    yield tuple(row) + pv
+                    yield (fix(row) if fix else tuple(row)) + pv
 
         return _rows()
 

@@ -20,9 +20,16 @@ change on its fixtures): comments, CDATA sections, and processing
 instructions are skipped during both scans, and attribute values are scanned
 quote-aware so '>' inside a quoted value cannot end a tag early.
 
+One loop, many openers: every input kind (plain byte range, bzip2 block
+range, transcoded range, in-memory text) is opened into a byte buffer plus a
+monotone ownership predicate, and one record-region loop (_scan_regions)
+scans them all — the reference's one record reader over a decoded stream.
+
 Scale note: each Spark task scans only its own byte range with a bounded
 buffer (memory ~ max record size + chunk), so the scan parallelizes to
-arbitrary file sizes. gzip is not splittable -> whole-file range; bzip2 IS
+arbitrary file sizes. The bound holds for every charset: non-ASCII-compatible
+ones, stateful ISO-2022/HZ included, are transcoded incrementally, never
+decoded whole. gzip is not splittable -> whole-file range; bzip2 IS
 splittable: byte-range splits over the compressed file with block-aligned
 ownership (bz2split module; the reference's BYBLOCK mode,
 XmlInputFormat.scala:93-103).
@@ -31,7 +38,6 @@ XmlInputFormat.scala:93-103).
 from __future__ import annotations
 
 import functools
-import os
 from dataclasses import dataclass
 from typing import Iterator, List, Optional, Tuple
 
@@ -39,6 +45,8 @@ from spark_xml_spark.xmlcore import codecs, fs
 
 _CHUNK = 1 << 20
 _NAME_END = (" ", "\t", "\n", "\r", ">", "/")
+_END_TAG_OK = (ord(" "), ord("\t"), ord("\n"), ord("\r"), ord(">"))
+_MARKUP_OPENERS = (b"<!--", b"<![CDATA[", b"<?")
 
 # Charsets where '<', '>', '/', '"' are single ASCII bytes (safe to scan raw).
 _ASCII_COMPAT_PREFIXES = ("utf-8", "utf8", "ascii", "latin", "iso-8859", "cp12", "koi8")
@@ -50,12 +58,12 @@ def is_ascii_compatible(charset: str) -> bool:
 
 
 # Fixed code-unit widths for the UTF-16/32 families: these split in
-# parallel via the transcoding scanner (_scan_unit_width_range). Other
+# parallel via the transcoding opener (_open_transcoded_range). Other
 # non-ASCII-compatible charsets probe as width-1 below when their codec
 # is provably stateless single-byte (EBCDIC family etc.); multi-byte CJK
 # codecs split via the '<'-aligned transcode when lt_safe_multibyte
-# proves re-sync (_scan_lt_aligned_range); only charsets where a raw
-# 0x3C is ambiguous (ISO-2022, HZ) stay whole-file.
+# proves re-sync; only charsets where a raw 0x3C is ambiguous
+# (ISO-2022, HZ) stay whole-file.
 _UNIT_WIDTHS = {
     "utf-16": 2, "utf-16-le": 2, "utf-16-be": 2, "utf-16le": 2, "utf-16be": 2,
     "utf-32": 4, "utf-32-le": 4, "utf-32-be": 4, "utf-32le": 4, "utf-32be": 4,
@@ -223,10 +231,6 @@ class _CapReader:
         self._fh.close()
 
 
-def _strip_scheme(p: str) -> str:
-    return fs.strip_local_scheme(p)
-
-
 def expand_paths(path) -> List[str]:
     """Resolve a path / directory / glob (or list of them) to data files.
     Local paths and ``file:`` URIs use the stdlib; any other scheme
@@ -243,10 +247,6 @@ def _expand_with_sizes(path) -> List[tuple]:
     if not out:
         raise FileNotFoundError(f"No input files found under: {path}")
     return out
-
-
-def _compression_of(path: str) -> Optional[str]:
-    return codecs.compression_of(path)
 
 
 def plan_splits(
@@ -266,7 +266,7 @@ def plan_splits(
     don't list it twice."""
     splits: List[FileSplit] = []
     for f, size in (files if files is not None else _expand_with_sizes(path)):
-        comp = _compression_of(f)
+        comp = codecs.compression_of(f)
         if comp == "bz2" and is_ascii_compatible(charset):
             # bzip2 is block-splittable (Hadoop BYBLOCK semantics,
             # XmlInputFormat.scala:93-103): byte-range splits over the
@@ -366,6 +366,9 @@ class _Buffer:
         self.ensure(abs_end)
         return self._buf[abs_start - self._base: abs_end - self._base]
 
+    def close(self) -> None:
+        self._fh.close()
+
     def discard_to(self, abs_pos: int) -> None:
         """Lazy prefix discard: slicing the buffer per record would memcpy
         the remaining window every time (quadratic per chunk); only compact
@@ -375,32 +378,36 @@ class _Buffer:
             self._base = abs_pos
 
 
-def _open_stream(split: FileSplit):
+def _open_stream(split: FileSplit, start: int):
+    """The split's stream positioned at ``start``, capped at the committed
+    offset ``split.eof``. Compressed streams other than bzip2 ranges are
+    whole-file splits read from byte 0; their cap applies to the
+    compressed bytes."""
     if split.compression is not None:
         raw = fs.open_input(split.path)
         if split.eof >= 0:
             raw = _CapReader(raw, split.eof)
         return codecs.wrap_read(raw, split.compression)
-    # random-access handle: scan_split seeks to the split start, so a task
-    # never pulls bytes before its range (ranged reads on remote stores)
-    return fs.open_input_at(split.path, 0)
+    # random-access handle seeked to the start, so a task never pulls
+    # bytes before its range (ranged reads on remote stores)
+    fh = fs.open_input_at(split.path, start)
+    return fh if split.eof < 0 else _CapReader(fh, split.eof - start)
 
 
 class _Utf8Transcoder:
-    """Binary-stream adapter: serves the UTF-8 transcoding of a unit-width
-    charset stream (UTF-16/32) so the byte-space scanner machinery
-    (_Buffer, _batch_scan_window, _find_start_tag, _find_record_end, the
-    quote/comment/CDATA/depth rules) applies unchanged — the analogue of
-    the reference's per-split InputStreamReader decode
-    (XmlInputFormat.scala:76-122).
+    """Binary-stream adapter: serves the UTF-8 transcoding of a stream in a
+    non-ASCII-compatible charset so the byte-space record loop
+    (:func:`_scan_regions` and its quote/comment/CDATA/depth rules) applies
+    unchanged — the analogue of the reference's per-split InputStreamReader
+    decode (XmlInputFormat.scala:76-122).
 
     Ownership: ``owned_src_bytes`` counts source bytes belonging to this
-    split (unit-aligned; -1 = unbounded). Reads are split exactly at that
-    boundary, so ``owned_utf8_end`` — the transcoded offset of the first
-    byte produced from unowned source — is exact. A surrogate pair
-    straddling the boundary is held in decoder state and materializes on
-    the unowned side; '<' is a single BMP unit and can never straddle, so
-    record-start ownership is unaffected.
+    split (-1 = unbounded). Reads are split exactly at that boundary, so
+    ``owned_utf8_end`` — the transcoded offset of the first byte produced
+    from unowned source — is exact. A surrogate pair straddling the
+    boundary is held in decoder state and materializes on the unowned
+    side; '<' is a single BMP unit and can never straddle, so record-start
+    ownership is unaffected.
     """
 
     __slots__ = ("_fh", "_dec", "_owned_left", "owned_utf8_end", "_produced",
@@ -442,8 +449,14 @@ class _Utf8Transcoder:
                 return out
         return b""
 
+    def owns(self, offset: int) -> bool:
+        return self.owned_utf8_end is None or offset < self.owned_utf8_end
 
-def _resolve_unit_charset(split: FileSplit, charset: str, w: int) -> str:
+    def close(self) -> None:
+        self._fh.close()
+
+
+def _resolve_unit_charset(split: FileSplit, charset: str, w: Optional[int]) -> str:
     """Endianness-explicit Python codec name for a unit-width charset.
 
     Bare 'utf-16'/'utf-32' with a mid-file split needs the file-head BOM
@@ -460,48 +473,6 @@ def _resolve_unit_charset(split: FileSplit, charset: str, w: int) -> str:
             return "utf-32-be"
         return "utf-32-le"
     return c
-
-
-def _scan_unit_width_range(
-    split: FileSplit, row_tag: str, charset: str, w: int
-) -> Iterator[str]:
-    """Split-parallel scan for UTF-16/32: transcode the owned unit-aligned
-    byte range (plus unowned overflow for the last straddling record) to
-    UTF-8 and run the standard byte scanner over it. Ownership contract
-    identical to scan_split: a record belongs to the split where its start
-    tag's first source byte lies; both neighbours align the boundary to
-    the same unit grid (BOM is exactly one unit, so the grid is byte 0)."""
-    cs = _resolve_unit_charset(split, charset, w)
-    if split.compression is not None:
-        fh = _open_stream(split)  # decompressed whole stream, all owned
-        owned = -1
-    else:
-        start = split.start - (split.start % w)
-        end = split.end if split.end < 0 else split.end - (split.end % w)
-        fh = _seek_or_skip(_open_stream(split), start, split.eof)
-        owned = -1 if end < 0 else max(end - start, 0)
-        if owned == 0 and end >= 0:
-            fh.close()
-            return
-    yield from _scan_transcoded(fh, cs, owned, row_tag)
-
-
-def _seek_or_skip(fh, start: int, eof: int):
-    """Position ``fh`` at ``start`` (seek, or read-skip for non-seekable
-    streams) and apply the committed-offset cap when ``eof`` >= 0 —
-    the shared preamble of every ranged transcoding scanner."""
-    try:
-        fh.seek(start)
-    except (OSError, ValueError):
-        left = start
-        while left > 0:
-            skipped = fh.read(min(_CHUNK, left))
-            if not skipped:
-                break
-            left -= len(skipped)
-    if eof >= 0:
-        fh = _CapReader(fh, eof - start)
-    return fh
 
 
 class _PrefixedReader:
@@ -525,110 +496,92 @@ class _PrefixedReader:
         self._fh.close()
 
 
-def _scan_lt_aligned_range(
-    split: FileSplit, row_tag: str, charset: str
-) -> Iterator[str]:
-    """Split-parallel scan for lt-safe multi-byte charsets (Shift-JIS,
-    Big5, EUC-JP/KR, GBK/GB18030 — :func:`lt_safe_multibyte`): byte
-    offsets are not character boundaries, but every 0x3C byte IS one
-    (proven by the probe), so each task aligns to the first '<' at/after
-    its range start and transcodes from there. Ownership: a record
-    belongs to the split whose [start, end) contains its start-tag's
-    '<' source byte — the left neighbour's transcoder stops admitting
-    record starts at the same boundary (owned_utf8_end), and no '<' can
-    exist in the unaligned gap [start, first-'<'), so the partition is
-    exact: no loss, no duplication. The reference decodes any charset
-    per split (XmlInputFormat.scala:76-122) but ASSUMES re-sync; this
-    path only runs for codecs where the probe proved it."""
-    cs = charset.lower().replace("_", "-")
-    if split.compression is not None:
-        # decompressed whole stream, all owned (gzip etc.: one split)
-        yield from _scan_transcoded(_open_stream(split), cs, -1, row_tag)
-        return
-    start = split.start
-    fh = _seek_or_skip(_open_stream(split), start, split.eof)
-    if start == 0:
-        # file head: decode the prologue too, no alignment needed
-        owned = -1 if split.end < 0 else split.end
-        if owned == 0 and split.end >= 0:
+# --- openers ----------------------------------------------------------------
+# Each input kind becomes (buffer, first offset, owns, buffer charset) for
+# _scan_regions, or None when the split owns nothing. ``owns(p)`` says
+# whether a record whose start tag begins at buffer offset p belongs to the
+# split; every predicate is monotone (once false, false for every later p).
+
+
+def _open_plain_range(split: FileSplit, charset: str):
+    """ASCII-compatible charsets: raw bytes addressed by file offset; the
+    split owns every record start before ``split.end``."""
+    end = split.end
+    buf = _Buffer(_open_stream(split, split.start), base=split.start)
+    return buf, split.start, lambda p: end == -1 or p < end, charset
+
+
+def _open_transcoded_range(split: FileSplit, charset: str):
+    """Every other charset, transcoded to UTF-8 per split by a
+    :class:`_Utf8Transcoder` that reports where owned source ends.
+
+    - UTF-16/32 and stateless single-byte codecs (EBCDIC): the range is
+      aligned down to the ``unit_width`` grid (a BOM is exactly one unit,
+      so the grid is byte 0).
+    - '<'-safe multi-byte codecs (Shift-JIS, Big5, EUC, GBK —
+      :func:`lt_safe_multibyte`): byte offsets are not character
+      boundaries but every 0x3C byte is, so a mid-file range starts at its
+      first '<'. No '<' can exist in the unaligned gap, so a record belongs
+      to the split whose [start, end) holds its start tag's '<' byte: no
+      loss, no duplication. The reference decodes any charset per split
+      (XmlInputFormat.scala:76-122) but ASSUMES re-sync; this path only
+      runs for codecs where the probe proved it.
+    - Stateful codecs (ISO-2022, HZ, UTF-7) and compressed files arrive
+      as whole-file splits and are transcoded from byte 0, all owned.
+
+    Invalid bytes decode to U+FFFD, as Java's InputStreamReader does."""
+    w = unit_width(charset)
+    start, end = split.start, split.end
+    if w:
+        start -= start % w
+        if end >= 0:
+            end -= end % w
+    if 0 <= end <= start:
+        return None
+    cs = _resolve_unit_charset(split, charset, w)
+    fh = _open_stream(split, start)
+    if start > 0 and not w:
+        aligned = _align_to_lt(fh, start, end)
+        if aligned is None:
             fh.close()
-            return
-        yield from _scan_transcoded(fh, cs, owned, row_tag)
-        return
-    # align: find the first 0x3C at/after start (a guaranteed character
-    # boundary); record starts can only live at '<' bytes, so nothing
-    # ownable precedes it. The search is BOUNDED by split.end: a '<' at
-    # or beyond end is the right neighbour's to own, so a split whose
-    # range lies inside a '<'-free region (huge text node) must not
-    # stream to EOF looking for one — each task reads only its range
-    # plus at most one chunk.
-    pos = start
-    head = b""
+            return None
+        fh, start = aligned
+    tc = _Utf8Transcoder(fh, cs, -1 if end < 0 else end - start)
+    return _Buffer(tc), 0, tc.owns, "utf-8"
+
+
+def _align_to_lt(fh, pos: int, end: int):
+    """``(reader, offset)`` of the first 0x3C byte at/after ``pos`` (a
+    guaranteed character boundary in an lt-safe codec; record starts can
+    only live at '<' bytes, so nothing ownable precedes it), or None when
+    no '<' lies before ``end``. The search is BOUNDED by ``end``: a '<' at
+    or beyond it is the right neighbour's to own, so a range inside a
+    '<'-free region (huge text node) reads only itself plus one chunk."""
     while True:
         chunk = fh.read(_CHUNK)
         if not chunk:
-            fh.close()
-            return  # no '<' in the remainder: nothing starts here
+            return None  # no '<' in the remainder: nothing starts here
         i = chunk.find(b"<")
         if i >= 0:
             pos += i
-            head = chunk[i:]
-            break
+            return None if 0 <= end <= pos else (_PrefixedReader(chunk[i:], fh), pos)
         pos += len(chunk)
-        if split.end >= 0 and pos >= split.end:
-            fh.close()
-            return  # no '<' in the owned range: nothing starts here
-    if split.end >= 0 and pos >= split.end:
-        fh.close()
-        return  # first '<' lies beyond the owned range
-    owned = -1 if split.end < 0 else split.end - pos
-    yield from _scan_transcoded(_PrefixedReader(head, fh), cs, owned,
-                                row_tag)
+        if 0 <= end <= pos:
+            return None
 
 
-def _scan_transcoded(fh, cs: str, owned: int, row_tag: str) -> Iterator[str]:
-    """Shared scan loop over a :class:`_Utf8Transcoder` stream: UTF-16/32
-    unit-aligned ranges and lt-aligned multi-byte ranges both run the
-    standard UTF-8 byte scanner over the transcoded stream; ``owned``
-    source bytes bound where new record starts are admitted."""
-    tc = _Utf8Transcoder(fh, cs, owned)
-    try:
-        buf = _Buffer(tc)  # utf-8 transcoded offsets, base 0
-        start_pat = b"<" + row_tag.encode("utf-8")
-        end_pat = b"</" + row_tag.encode("utf-8")
-        pos = 0
-        dirty_until = -1
-        while True:
-            # dynamic ownership limit: None until the transcoder crosses the
-            # source boundary — every byte produced before that IS owned
-            if pos >= dirty_until:
-                buf.ensure(pos + _CHUNK)
-                spans, new_pos, mark_dirty = _batch_scan_window(
-                    buf, start_pat, end_pat, pos
-                )
-                if spans:
-                    limit = tc.owned_utf8_end
-                    for s, e in spans:
-                        if limit is not None and s >= limit:
-                            return
-                        yield buf.slice(s, e).decode("utf-8", errors="replace")
-                    pos = new_pos
-                    buf.discard_to(pos)
-                    continue
-                if mark_dirty:
-                    dirty_until = buf.end_loaded
-            i = _find_start_tag(buf, start_pat, pos)
-            limit = tc.owned_utf8_end
-            if i == -1 or (limit is not None and i >= limit):
-                return
-            rec_end = _find_record_end(buf, start_pat, end_pat, i)
-            if rec_end == -1:
-                return
-            yield buf.slice(i, rec_end).decode("utf-8", errors="replace")
-            pos = rec_end
-            buf.discard_to(pos)
-    finally:
-        fh.close()
+def _open_bz2_range(split: FileSplit, charset: str):
+    """Block-aligned bzip2 range: decompress from the first owned block,
+    own every record whose start tag begins inside the owned blocks'
+    bytes, continue into later blocks only to finish a straddling record
+    (Hadoop BYBLOCK semantics — see the bz2split module docstring)."""
+    from spark_xml_spark.xmlcore import bz2split
+
+    end = split.end if split.end != -1 else fs.size_of(split.path)
+    stream = bz2split.open_block_range(split.path, split.start, end)
+    if stream is None:
+        return None
+    return _Buffer(stream), 0, stream.owns, charset
 
 
 def scan_split(split: FileSplit, row_tag: str, charset: str = "UTF-8") -> Iterator[str]:
@@ -671,132 +624,94 @@ def scan_split_windows(
 
     - ``("win", text, spans)``: a provably-clean batch window decoded
       ONCE; ``spans`` are ``(start, end)`` *str* offsets of the owned
-      records inside ``text``. Emitted only when byte offsets are valid
-      str offsets (single-byte charset, or an all-ASCII window under an
-      ASCII-compatible charset) — so downstream can run a learned
-      whole-record regex straight over the window without per-record
-      slicing/decoding.
+      records inside ``text``. Emitted for every input kind (plain and
+      compressed files, bzip2 block ranges, transcoded UTF-16/32, EBCDIC
+      and CJK ranges) whenever byte offsets are valid str offsets: a
+      single-byte ASCII-compatible charset, or an all-ASCII window — so
+      downstream can run a learned whole-record regex straight over the
+      window without per-record slicing/decoding.
     - ``("rec", record_str)``: one decoded record from the exact path
-      (dirty windows, compressed bz2 ranges, unit-width charsets,
-      non-ASCII windows).
+      (dirty or non-ASCII windows).
 
     scan_split() is the flattening wrapper, so both views share one
     scanner and one ownership rule."""
     if split.compression == "bz2" and not split.whole_file:
-        for r in _scan_bz2_range(split, row_tag, charset):
-            yield ("rec", r)
+        opened = _open_bz2_range(split, charset)
+    elif is_ascii_compatible(charset):
+        opened = _open_plain_range(split, charset)
+    else:
+        opened = _open_transcoded_range(split, charset)
+    if opened is None:
         return
-    w = unit_width(charset)
-    if w is not None:
-        # UTF-16/32: split-parallel via per-split transcode (the
-        # reference's InputStreamReader-per-split shape,
-        # XmlInputFormat.scala:76-122) — no whole-file degrade
-        for r in _scan_unit_width_range(split, row_tag, charset, w):
-            yield ("rec", r)
-        return
-    if not is_ascii_compatible(charset):
-        if lt_safe_multibyte(charset):
-            # Shift-JIS/Big5/EUC/GBK family: split-parallel via the
-            # '<'-aligned per-split transcode (compressed files arrive
-            # as one whole-file split and take the owned=-1 path)
-            for r in _scan_lt_aligned_range(split, row_tag, charset):
-                yield ("rec", r)
-            return
-        # Stateful exotics (ISO-2022, HZ): decode the whole stream
-        # (decompressing if needed) and scan text.
-        fh = fs.open_input(split.path)
-        try:
-            if split.eof >= 0:
-                fh = _CapReader(fh, split.eof)
-            if split.compression is not None:
-                fh = codecs.wrap_read(fh, split.compression)
-            text = fh.read().decode(charset)
-        finally:
-            fh.close()
-        for r in scan_string(text, row_tag):
-            yield ("rec", r)
-        return
+    buf, pos, owns, buf_charset = opened
+    try:
+        yield from _scan_regions(buf, row_tag, pos, owns, buf_charset)
+    finally:
+        buf.close()
 
+
+def _scan_regions(buf: _Buffer, row_tag: str, pos: int, owns, charset: str):
+    """The one record-region loop behind every input kind: scan ``buf``
+    (bytes in ``charset``) from ``pos`` and yield ``("win", text, spans)``
+    / ``("rec", record)`` items for the records whose start ``owns``
+    admits.
+
+    Each loaded window is first offered to :func:`_batch_scan_window`
+    (one C regex pass per chunk instead of ~10 C calls per record); a
+    clean window becomes one "win" item when byte offsets are valid str
+    offsets, else one "rec" per span. Anything unprovable takes the exact
+    per-record path; ``dirty_until`` stops re-scanning a rejected window
+    per record (which would be quadratic on e.g. attribute-heavy data).
+    ``owns`` is monotone, so a window is filtered only when its last span
+    is unowned, and the first unowned start ends the scan."""
+    tag = row_tag.encode(charset if is_ascii_compatible(charset) else "utf-8")
+    start_pat = b"<" + tag
+    end_pat = b"</" + tag
     single_byte = charset.lower().replace("_", "-").startswith(
         _SINGLE_BYTE_PREFIXES
     )
-    fh = _open_stream(split)
-    try:
-        tag = row_tag.encode(charset if is_ascii_compatible(charset) else "utf-8")
-        start_pat = b"<" + tag
-        end_pat = b"</" + tag
-        if split.start > 0:
-            # cheap skip: stream to the start offset (seek on plain files)
-            try:
-                fh.seek(split.start)
-                if split.compression is None and split.eof >= 0:
-                    fh = _CapReader(fh, split.eof - split.start)
-                buf = _Buffer(fh, base=split.start)
-            except (OSError, ValueError):
-                if split.compression is None and split.eof >= 0:
-                    fh = _CapReader(fh, split.eof)
-                buf = _Buffer(fh)
-                buf.ensure(split.start)
-                buf.discard_to(split.start)
-        else:
-            if split.compression is None and split.eof >= 0:
-                fh = _CapReader(fh, split.eof)
-            buf = _Buffer(fh)
-        limit = split.end  # only record *starts* before this belong to us
-        pos = split.start
-        dirty_until = -1  # loaded bytes already proven batch-unfriendly
-        while True:
-            # batched extraction over the loaded window when it is provably
-            # clean (one C regex pass per chunk instead of ~10 C calls per
-            # record); anything unprovable takes the exact per-record path.
-            # dirty_until stops re-scanning a rejected window per record
-            # (which would be quadratic on e.g. attribute-heavy data).
-            if pos >= dirty_until:
-                buf.ensure(pos + _CHUNK)
-                spans, new_pos, mark_dirty = _batch_scan_window(
-                    buf, start_pat, end_pat, pos
-                )
+    dirty_until = -1  # loaded bytes already proven batch-unfriendly
+    while True:
+        if pos >= dirty_until:
+            buf.ensure(pos + _CHUNK)
+            spans, new_pos, mark_dirty = _batch_scan_window(
+                buf, start_pat, end_pat, pos
+            )
+            if spans:
+                past_limit = not owns(spans[-1][0])
+                if past_limit:
+                    spans = [(s, e) for s, e in spans if owns(s)]
                 if spans:
-                    owned = spans
-                    past_limit = False
-                    if limit != -1 and spans[-1][0] >= limit:
-                        owned = [(s, e) for s, e in spans if s < limit]
-                        past_limit = True
-                    if owned:
-                        lo, hi = owned[0][0], owned[-1][1]
-                        wb = buf.slice(lo, hi)
-                        if single_byte or wb.isascii():
+                    lo, hi = spans[0][0], spans[-1][1]
+                    wb = buf.slice(lo, hi)
+                    if single_byte or wb.isascii():
+                        yield (
+                            "win",
+                            wb.decode(charset, errors="replace"),
+                            [(s - lo, e - lo) for s, e in spans],
+                        )
+                    else:
+                        for s, e in spans:
                             yield (
-                                "win",
-                                wb.decode(charset, errors="replace"),
-                                [(s - lo, e - lo) for s, e in owned],
+                                "rec",
+                                buf.slice(s, e).decode(charset, errors="replace"),
                             )
-                        else:
-                            for s, e in owned:
-                                yield (
-                                    "rec",
-                                    buf.slice(s, e).decode(
-                                        charset, errors="replace"
-                                    ),
-                                )
-                    if past_limit:
-                        return
-                    pos = new_pos
-                    buf.discard_to(pos)
-                    continue
-                if mark_dirty:
-                    dirty_until = buf.end_loaded
-            i = _find_start_tag(buf, start_pat, pos)
-            if i == -1 or (limit != -1 and i >= limit):
-                return
-            rec_end = _find_record_end(buf, start_pat, end_pat, i)
-            if rec_end == -1:
-                return  # unterminated trailing record: no full row region
-            yield ("rec", buf.slice(i, rec_end).decode(charset, errors="replace"))
-            pos = rec_end
-            buf.discard_to(pos)
-    finally:
-        fh.close()
+                if past_limit:
+                    return
+                pos = new_pos
+                buf.discard_to(pos)
+                continue
+            if mark_dirty:
+                dirty_until = buf.end_loaded
+        i = _find_start_tag(buf, start_pat, pos)
+        if i == -1 or not owns(i):
+            return
+        rec_end = _find_record_end(buf, start_pat, end_pat, i)
+        if rec_end == -1:
+            return  # unterminated trailing record: no full row region
+        yield ("rec", buf.slice(i, rec_end).decode(charset, errors="replace"))
+        pos = rec_end
+        buf.discard_to(pos)
 
 
 # bytes the batch scanner cannot adjudicate wholesale: quotes (end-tag
@@ -831,29 +746,30 @@ def _batch_scan_window(buf: _Buffer, start_pat: bytes, end_pat: bytes, pos: int)
     window to the exact per-record path. On clean tabular data — the
     dominant shape at scale — each chunk costs two C regex passes and two
     comparisons per record instead of ~10 buffer searches per record."""
-    base = buf._base
-    window = buf._buf[pos - base:]
+    data, base = buf._buf, buf._base
+    off = pos - base
     # Cut at the first offender byte so e.g. a quoted XML declaration at
     # the file head only excludes itself, not the whole chunk. Four
     # memchr-speed finds beat one alternation regex ~10x here (the regex
-    # scan was 55% of a clean-data scan_split profile).
-    cut = len(window)
+    # scan was 55% of a clean-data scan_split profile). The finds and
+    # regex passes run on the loaded buffer in place: a rejected window
+    # (every record retries on quote-bearing data) costs no copy.
+    cut = len(data)
     for pat in (b'"', b"'", b"<!", b"<?"):
-        i = window.find(pat, 0, cut)
+        i = data.find(pat, off, cut)
         if i >= 0:
             cut = i
-    if cut < 1024:
+    if cut - off < 1024:
         return None, pos, False  # offender too close: cheap retry later
-    window = window[:cut]
     s_re, e_re = _batch_patterns(start_pat, end_pat)
-    starts = [m.start() for m in s_re.finditer(window)]
+    starts = [m.start() for m in s_re.finditer(data, off, cut)]
     if not starts:
         return None, pos, True
     # end tags BEFORE the first start are the tail of a record owned by the
     # previous split (every non-first split begins mid-record) — skip them
     # rather than rejecting the window; stray ends between records still
     # fail the alignment check below.
-    ends = [m.span() for m in e_re.finditer(window) if m.start() > starts[0]]
+    ends = [m.span() for m in e_re.finditer(data, off, cut) if m.start() > starts[0]]
     n = min(len(starts), len(ends))
     if n == 0:
         return None, pos, True
@@ -865,8 +781,8 @@ def _batch_scan_window(buf: _Buffer, start_pat: bytes, end_pat: bytes, pos: int)
             return None, pos, True  # stray end tag before its start
         if k + 1 < len(starts) and starts[k + 1] < ee:
             return None, pos, True  # nested same-name or self-closing row
-        spans.append((pos + s, pos + ee))
-    return spans, pos + ends[n - 1][1], False
+        spans.append((base + s, base + ee))
+    return spans, base + ends[n - 1][1], False
 
 
 def _find_start_tag(buf: _Buffer, start_pat: bytes, abs_from: int) -> int:
@@ -882,7 +798,7 @@ def _find_start_tag(buf: _Buffer, start_pat: bytes, abs_from: int) -> int:
         # (bounded searches: nothing past i is loaded by them).
         openers = [
             m
-            for opener in (b"<!--", b"<![CDATA[", b"<?")
+            for opener in _MARKUP_OPENERS
             for m in (buf.find(opener, pos, i),)
             if m != -1 and m < i
         ]
@@ -973,10 +889,6 @@ def _scan_tag_end(buf: _Buffer, i: int) -> Tuple[int, bool]:
         p += 1
 
 
-_END_TAG_OK = (ord(" "), ord("\t"), ord("\n"), ord("\r"), ord(">"))
-_MARKUP_OPENERS = (b"<!--", b"<![CDATA[", b"<?")
-
-
 def _find_record_end(buf: _Buffer, start_pat: bytes, end_pat: bytes, rec_start: int) -> int:
     """From the record's start tag, return the absolute position just past its
     matching end tag (depth-counting same-name nesting,
@@ -1016,7 +928,7 @@ def _find_record_end(buf: _Buffer, start_pat: bytes, end_pat: bytes, rec_start: 
             continue
         if buf.slice(lt, lt + len(end_pat)) == end_pat:
             nxt = buf.byte_at(lt + len(end_pat))
-            if nxt is not None and chr(nxt) in (" ", "\t", "\n", "\r", ">"):
+            if nxt is not None and nxt in _END_TAG_OK:
                 close = buf.find(b">", lt + len(end_pat))
                 if close == -1:
                     return -1
@@ -1041,57 +953,6 @@ def _find_record_end(buf: _Buffer, start_pat: bytes, end_pat: bytes, rec_start: 
         pos = after
 
 
-def _scan_bz2_range(split: FileSplit, row_tag: str, charset: str) -> Iterator[str]:
-    """Block-aligned bzip2 split scan: decompress from the first owned
-    block, own every record whose start tag begins inside the owned blocks'
-    bytes, continue into subsequent blocks only to finish a straddling
-    record (Hadoop BYBLOCK semantics — see bz2split module docstring)."""
-    from spark_xml_spark.xmlcore import bz2split
-
-    end = split.end if split.end != -1 else fs.size_of(split.path)
-    stream = bz2split.open_block_range(split.path, split.start, end)
-    if stream is None:
-        return
-    try:
-        tag = row_tag.encode(charset if is_ascii_compatible(charset) else "utf-8")
-        start_pat = b"<" + tag
-        end_pat = b"</" + tag
-        buf = _Buffer(stream)
-        pos = 0
-        dirty_until = -1
-        while True:
-            # same batched window extraction as the plain-file scan; the
-            # owned region is a contiguous prefix of the decompressed
-            # stream, so the first unowned span start ends the task
-            # exactly like the per-record owns() check
-            if pos >= dirty_until:
-                buf.ensure(pos + _CHUNK)
-                spans, new_pos, mark_dirty = _batch_scan_window(
-                    buf, start_pat, end_pat, pos
-                )
-                if spans:
-                    for s, e in spans:
-                        if not stream.owns(s):
-                            return
-                        yield buf.slice(s, e).decode(charset, errors="replace")
-                    pos = new_pos
-                    buf.discard_to(pos)
-                    continue
-                if mark_dirty:
-                    dirty_until = buf.end_loaded
-            i = _find_start_tag(buf, start_pat, pos)
-            if i == -1 or not stream.owns(i):
-                return
-            rec_end = _find_record_end(buf, start_pat, end_pat, i)
-            if rec_end == -1:
-                return
-            yield buf.slice(i, rec_end).decode(charset, errors="replace")
-            pos = rec_end
-            buf.discard_to(pos)
-    finally:
-        stream.close()
-
-
 def _window_needs_slow_scan(window: bytes, start_pat: bytes) -> bool:
     """True when the bytes between a start tag and the first end-tag
     candidate contain anything the fast path can't adjudicate: a genuine
@@ -1112,22 +973,9 @@ def _window_needs_slow_scan(window: bytes, start_pat: bytes) -> bool:
 
 
 def scan_string(text: str, row_tag: str) -> Iterator[str]:
-    """Scan an in-memory document (used for non-ASCII charsets and for
-    schema_of_xml over whole documents)."""
+    """Scan an in-memory document (schema_of_xml over whole documents);
+    every record start is owned."""
     import io
 
-    data = text.encode("utf-8")
-    buf = _Buffer(io.BytesIO(data))
-    start_pat = b"<" + row_tag.encode("utf-8")
-    end_pat = b"</" + row_tag.encode("utf-8")
-    pos = 0
-    while True:
-        i = _find_start_tag(buf, start_pat, pos)
-        if i == -1:
-            return
-        rec_end = _find_record_end(buf, start_pat, end_pat, i)
-        if rec_end == -1:
-            return
-        yield buf.slice(i, rec_end).decode("utf-8", errors="replace")
-        pos = rec_end
-        buf.discard_to(pos)
+    buf = _Buffer(io.BytesIO(text.encode("utf-8")))
+    return window_records(_scan_regions(buf, row_tag, 0, lambda p: True, "utf-8"))

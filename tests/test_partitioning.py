@@ -557,7 +557,7 @@ def test_single_byte_probe_rejects_multibyte_codecs():
 def test_ebcdic_gzip_whole_file_decode():
     """Compressed EBCDIC: gzip forces a whole-file split; the transcode
     scanner must decode the decompressed cp037 stream exactly (the
-    compression branch of _scan_unit_width_range with owned=-1)."""
+    compressed whole-file branch of _open_transcoded_range, all owned)."""
     import gzip
 
     recs = [f"<r><a>{i}</a></r>" for i in range(40)]
@@ -572,3 +572,81 @@ def test_ebcdic_gzip_whole_file_decode():
     for s in splits:
         got.extend(_tok.scan_split(s, "r", "cp037"))
     assert got == recs
+
+
+# Every input kind the tokenizer opens, as (charset option, codec of the
+# file body, BOM, bzip2-compressed, an invalid byte sequence in that
+# charset). "string" is scan_string over in-memory text.
+_KINDS = {
+    "plain": ("UTF-8", "utf-8", b"", False, b"\xff"),
+    "bzip2": ("UTF-8", "utf-8", b"", True, b"\xff"),
+    "utf16le": ("UTF-16LE", "utf-16-le", b"", False, b"\x00\xd8"),
+    "utf16bom": ("UTF-16", "utf-16-le", b"\xff\xfe", False, b"\x00\xd8"),
+    "utf32be": ("UTF-32BE", "utf-32-be", b"", False, b"\x00\x11\x00\x00"),
+    "shiftjis": ("Shift_JIS", "shift_jis", b"", False, b"\xa0"),
+    "iso2022jp": ("ISO-2022-JP", "iso2022_jp", b"", False, b"\xff"),
+    "string": None,
+}
+
+
+def _write_kind(tmp_path, name, kind, pieces):
+    """Write ``pieces`` (text, or raw bytes already in the kind's charset)
+    as one file of ``kind``; returns its path."""
+    _cs, codec, bom, bzip, _bad = _KINDS[kind]
+    data = bom + b"".join(
+        p if isinstance(p, bytes) else p.encode(codec) for p in pieces
+    )
+    path = tmp_path / (name + (".xml.bz2" if bzip else ".xml"))
+    path.write_bytes(_bz2.compress(data, 1) if bzip else data)
+    return str(path)
+
+
+def _kind_items(kind, src, target):
+    if kind == "string":
+        return [("rec", r) for r in tokenizer.scan_string(src, "r")]
+    cs = _KINDS[kind][0]
+    return [
+        item
+        for s in tokenizer.plan_splits(src, cs, target)
+        for item in tokenizer.scan_split_windows(s, "r", cs)
+    ]
+
+
+@pytest.mark.parametrize("kind", list(_KINDS))
+def test_every_input_kind_scans_alike(kind, tmp_path, monkeypatch):
+    """One record-region loop serves every input kind, so at 4 KB, 64 KB
+    and whole-file targets each kind yields the same records as the
+    forced per-record path and as the document itself; the unterminated
+    final record is dropped by every kind; an all-ASCII document yields
+    "win" items from every file kind (bzip2 ranges and transcoded ranges
+    included); and an invalid byte decodes to U+FFFD, never raises."""
+    recs = []
+    for i in range(4000):
+        if i % 500 == 7:
+            recs.append(f'<r k="{i}"><a>{i}</a></r>')  # quotes: dirty window
+        elif i % 500 == 9:
+            recs.append(f"<r><!-- </r> --><a>{i}</a></r>")
+        else:
+            recs.append(f"<r><a>{i}</a><b>v{i}</b></r>")
+    doc = '<?xml version="1.0"?>\n<root>\n' + "\n".join(recs) + "\n<r><a>cut"
+    src = doc if kind == "string" else _write_kind(tmp_path, "t", kind, [doc])
+    if kind == "bzip2":
+        size = os.path.getsize(src)
+        assert len(bz2split.find_block_bits(src, 0, size)) >= 2  # multi-block
+    for target in (4096, 65536, 1 << 30):
+        items = _kind_items(kind, src, target)
+        monkeypatch.setattr(
+            tokenizer, "_batch_scan_window", lambda b, sp, ep, pos: (None, pos, True)
+        )
+        slow = list(tokenizer.window_records(_kind_items(kind, src, target)))
+        monkeypatch.undo()
+        assert list(tokenizer.window_records(items)) == slow == recs, target
+        if kind != "string":
+            assert any(item[0] == "win" for item in items), target
+    if kind != "string":
+        bad = _write_kind(
+            tmp_path, "bad", kind,
+            ["<root><r><a>ok</a></r><r><a>", _KINDS[kind][4], "</a></r></root>"],
+        )
+        got = list(tokenizer.window_records(_kind_items(kind, bad, 1 << 30)))
+        assert got == ["<r><a>ok</a></r>", "<r><a>\ufffd</a></r>"]

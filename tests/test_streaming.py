@@ -1236,3 +1236,36 @@ def test_stream_stream_interval_join_validation(spark, tmp_path):
         stream_stream_interval_join(stream, stream, key="k", how="cross")
     with pytest.raises(ValueError, match="join key"):
         stream_stream_interval_join(stream, stream, key=[])
+
+
+def test_stream_read_pins_timestamps_to_utc_like_batch(tmp_path):
+    """The stream reader's rows equal the batch reader's row path: naive
+    timestamps carry UTC tzinfo, so pyspark's Arrow conversion does not
+    read them in the worker's local zone (a stream under
+    TZ=America/New_York would otherwise shift 03:04:05 to 08:04:05 UTC)."""
+    from spark_xml_spark.sources.datasource import XmlReader
+    from spark_xml_spark.streaming.source import XmlStreamReader
+
+    schema = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("k", T.LongType()),
+        ]
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.xml").write_text(
+        "<rows>"
+        + "".join(
+            f"<r><ts>2020-01-02 03:04:0{i}</ts><k>{i}</k></r>" for i in range(3)
+        )
+        + "</rows>"
+    )
+    opts = {"path": str(src), "rowTag": "r"}
+    stream = XmlStreamReader(dict(opts), schema)
+    parts = stream.partitions(stream.initialOffset(), stream.latestOffset())
+    got = [row for p in parts for row in stream.read(p)]
+    batch = XmlReader({**opts, "arrowBatches": "false"}, schema)
+    want = [row for p in batch.partitions() for row in batch.read(p)]
+    assert len(want) == 3 and want[0][0].tzinfo is not None
+    assert got == want
