@@ -771,10 +771,11 @@ def _columnar_batches(
     A clean window runs the learned STRICT whole-record pattern's findall
     straight over its text — no per-record slicing, decoding, or match
     objects (tier ``columnar_window``). Soundness: a window is already
-    proven clean by _batch_scan_window (no quotes/comments/PIs, aligned
-    starts/ends, no nested same-name rows), a strict-pattern match is
-    confined to one record ([^<]* fields, literal tags) and can occur at
-    most once per record, so ``len(findall) == len(spans)`` implies
+    proven clean by _batch_scan_window (no comments/PIs, no '<' or '>'
+    inside a quoted value, aligned starts/ends, no nested same-name
+    rows), a strict-pattern match is confined to one record ([^<]*
+    fields and attribute values, literal tags) and can occur at most
+    once per record, so ``len(findall) == len(spans)`` implies
     per-record strict.match equivalence; strict has no optional groups,
     so every findall tuple has all groups participating (None-vs-''
     never arises — missing-field records fail strict and route to the
@@ -799,10 +800,10 @@ def _columnar_batches(
 
     def emit_records(batch):
         """The per-record ladder, INCLUDING pattern learning: pushed
-        scans and corpora whose windows are all dirty (attributes or
-        apostrophes make every window quote-bearing) send every record
-        here, so this must be able to learn the pattern or the scan
-        would silently run the row tier forever."""
+        scans and corpora whose windows are all dirty (e.g. '>' or '<'
+        inside every attribute value, or rows that self-nest) send every
+        record here, so this must be able to learn the pattern or the
+        scan would silently run the row tier forever."""
         t0 = perf_counter()
         if fast.pattern is None:
             probe = next((r for r in batch if "&" not in r), None)

@@ -20,6 +20,13 @@ change on its fixtures): comments, CDATA sections, and processing
 instructions are skipped during both scans, and attribute values are scanned
 quote-aware so '>' inside a quoted value cannot end a tag early.
 
+Quote-awareness costs nothing on well-formed data: a tag is *safe* when its
+quotes balance before its first '>' and no quoted value holds '<' or '>'
+(_UNSAFE_LT finds the first '<' that does not open one). Over a run of safe
+tags the quote-naive C regexes and the quote-aware walk agree on every tag
+end, so such runs — quoted attributes included — take the batch window
+scan; only the bytes from an unsafe tag on take the per-record walk.
+
 One loop, many openers: every input kind (plain byte range, bzip2 block
 range, transcoded range, in-memory text) is opened into a byte buffer plus a
 monotone ownership predicate, and one record-region loop (_scan_regions)
@@ -38,6 +45,7 @@ XmlInputFormat.scala:93-103).
 from __future__ import annotations
 
 import functools
+import re
 from dataclasses import dataclass
 from typing import Iterator, List, Optional, Tuple
 
@@ -657,11 +665,13 @@ def _scan_regions(buf: _Buffer, row_tag: str, pos: int, owns, charset: str):
     admits.
 
     Each loaded window is first offered to :func:`_batch_scan_window`
-    (one C regex pass per chunk instead of ~10 C calls per record); a
+    (one C regex pass per window instead of ~10 C calls per record); a
     clean window becomes one "win" item when byte offsets are valid str
-    offsets, else one "rec" per span. Anything unprovable takes the exact
-    per-record path; ``dirty_until`` stops re-scanning a rejected window
-    per record (which would be quadratic on e.g. attribute-heavy data).
+    offsets, else one "rec" per span. Windows with quoted attributes are
+    clean as long as their tags are safe (see :data:`_UNSAFE_LT`).
+    Anything unprovable takes the exact per-record path; ``dirty_until``
+    stops re-scanning a rejected window per record (which would be
+    quadratic on e.g. misaligned or self-nesting rows).
     ``owns`` is monotone, so a window is filtered only when its last span
     is unowned, and the first unowned start ends the scan."""
     tag = row_tag.encode(charset if is_ascii_compatible(charset) else "utf-8")
@@ -714,9 +724,20 @@ def _scan_regions(buf: _Buffer, row_tag: str, pos: int, owns, charset: str):
         buf.discard_to(pos)
 
 
-# bytes the batch scanner cannot adjudicate wholesale: quotes (end-tag
-# bytes inside attribute values), comments/CDATA/DOCTYPE ('<!'), PIs ('<?')
-# — located with per-pattern bytes.find (memchr) in _batch_scan_window
+# A '<' that opens markup ('<!', '<?') or does not open a *safe* tag: one
+# that runs to the first '>' outside quotes, with no '<' or '>' inside a
+# quoted value. Over safe tags the quote-naive batch regexes and the
+# quote-aware walk (_scan_tag_end) agree on every tag end, and no '<row' or
+# '</row' can hide in a value. Comments, CDATA and PIs have the shape of a
+# safe tag but can hide a rowTag, hence the '<!' / '<?' branch.
+_UNSAFE_LT = re.compile(
+    rb"<(?:[!?]|(?![^<>\"']*(?:(?:\"[^\"<>]*\"|'[^'<>]*')[^<>\"']*)*>))"
+)
+
+# A batch window spans at most this many bytes. Its span lists and decoded
+# text cost ~10x its size on dense small records, so windows stay a
+# fraction of a chunk to keep the scan's memory ~ max record + chunk.
+_WINDOW = _CHUNK >> 2
 
 _BATCH_RE_CACHE: dict = {}
 
@@ -725,8 +746,6 @@ def _batch_patterns(start_pat: bytes, end_pat: bytes):
     key = (start_pat, end_pat)
     pair = _BATCH_RE_CACHE.get(key)
     if pair is None:
-        import re
-
         pair = (
             re.compile(re.escape(start_pat) + rb"[ \t\r\n>/]"),
             re.compile(re.escape(end_pat) + rb"[ \t\r\n]*>"),
@@ -739,26 +758,36 @@ def _batch_scan_window(buf: _Buffer, start_pat: bytes, end_pat: bytes, pos: int)
     """Extract complete record spans from the loaded window at C speed,
     or (None, pos) when the window can't be adjudicated wholesale.
 
-    Sound because rejection is total: any quote (end-tag bytes inside an
-    attribute value must not close a record), any comment/CDATA/DOCTYPE
-    ('<!') or PI ('<?') opener, and any start/end misalignment (nested
-    same-name tags, self-closing rows, stray end tags) sends the whole
-    window to the exact per-record path. On clean tabular data — the
-    dominant shape at scale — each chunk costs two C regex passes and two
-    comparisons per record instead of ~10 buffer searches per record."""
+    The window is cut at its first offender: a comment/CDATA/DOCTYPE
+    ('<!') or PI ('<?') opener, or — when the window holds a quote at
+    all — the first '<' that does not open a safe tag (:data:`_UNSAFE_LT`;
+    e.g. '>' or '</row>' inside an attribute value, an unbalanced quote).
+    Every tag before the cut is safe, so quoted attributes and quotes in
+    text are admitted. Any start/end misalignment (nested same-name tags,
+    self-closing rows, stray end tags) still sends the whole window to
+    the exact per-record path. Each window (at most :data:`_WINDOW`
+    bytes) costs two C regex passes and two comparisons per record
+    instead of ~10 buffer searches per record; quote-bearing windows add
+    one C search for an unsafe '<'."""
     data, base = buf._buf, buf._base
     off = pos - base
-    # Cut at the first offender byte so e.g. a quoted XML declaration at
-    # the file head only excludes itself, not the whole chunk. Four
-    # memchr-speed finds beat one alternation regex ~10x here (the regex
-    # scan was 55% of a clean-data scan_split profile). The finds and
-    # regex passes run on the loaded buffer in place: a rejected window
-    # (every record retries on quote-bearing data) costs no copy.
-    cut = len(data)
-    for pat in (b'"', b"'", b"<!", b"<?"):
-        i = data.find(pat, off, cut)
-        if i >= 0:
-            cut = i
+    # Cut at _WINDOW bytes, then at the first offender, so e.g. the XML
+    # declaration at the file head only excludes itself. Quote-free windows
+    # need only two memchr-speed finds; the unsafe-tag search runs near the
+    # speed of the whole scan, so only quote-bearing windows pay for it,
+    # and it stops at the first offender of any kind, so a retry next to
+    # one stays short. Everything runs on the loaded buffer in place: a
+    # rejected window costs no copy.
+    cut = min(len(data), off + _WINDOW)
+    if data.find(b'"', off, cut) >= 0 or data.find(b"'", off, cut) >= 0:
+        m = _UNSAFE_LT.search(data, off, cut)
+        if m is not None:
+            cut = m.start()
+    else:
+        for pat in (b"<!", b"<?"):
+            i = data.find(pat, off, cut)
+            if i >= 0:
+                cut = i
     if cut - off < 1024:
         return None, pos, False  # offender too close: cheap retry later
     s_re, e_re = _batch_patterns(start_pat, end_pat)
@@ -854,12 +883,13 @@ def _scan_tag_end(buf: _Buffer, i: int) -> Tuple[int, bool]:
     quote tracking at all) — so one bad record cannot swallow the split's
     remaining valid records; the parser's mode policy then judges the
     mis-framed record itself."""
-    # fast path: no quotes anywhere before the first '>' -> it closes the tag
+    # fast path: a safe tag (_UNSAFE_LT) ends at its first '>'; unbalanced
+    # quotes and '<' or '>' inside a value take the walk below
     j = buf.find(b">", i + 1)
     if j != -1:
-        head = buf.slice(i + 1, j)
-        if b'"' not in head and b"'" not in head:
-            return j + 1, head.rstrip(b" \t\r\n").endswith(b"/")
+        tag = buf.slice(i, j + 1)
+        if _UNSAFE_LT.match(tag) is None:
+            return j + 1, tag[1:-1].rstrip(b" \t\r\n").endswith(b"/")
     p = i + 1
     quote = 0
     last = 0
@@ -956,12 +986,13 @@ def _find_record_end(buf: _Buffer, start_pat: bytes, end_pat: bytes, rec_start: 
 def _window_needs_slow_scan(window: bytes, start_pat: bytes) -> bool:
     """True when the bytes between a start tag and the first end-tag
     candidate contain anything the fast path can't adjudicate: a genuine
-    nested same-name start tag, non-element markup that could hide a
-    rowTag (comment / CDATA / PI), or a quote character (an end-tag byte
-    sequence inside a quoted attribute value must not close the record —
-    the slow path's _scan_tag_end is quote-aware, so route quoted content
-    there to keep both paths' semantics identical)."""
-    if b'"' in window or b"'" in window:
+    nested same-name start tag, or a '<' that :data:`_UNSAFE_LT` flags —
+    non-element markup that could hide a rowTag (comment / CDATA / PI)
+    or a tag that is not safe (an end-tag byte sequence inside a quoted
+    value must not close the record; the slow path's _scan_tag_end is
+    quote-aware, so such content goes there to keep both paths'
+    semantics identical)."""
+    if _UNSAFE_LT.search(window):
         return True
     i = window.find(start_pat)
     while i != -1:
@@ -969,7 +1000,7 @@ def _window_needs_slow_scan(window: bytes, start_pat: bytes) -> bool:
         if j >= len(window) or chr(window[j]) in _NAME_END:
             return True
         i = window.find(start_pat, i + 1)
-    return any(op in window for op in _MARKUP_OPENERS)
+    return False
 
 
 def scan_string(text: str, row_tag: str) -> Iterator[str]:

@@ -481,9 +481,10 @@ def test_window_path_null_elided_and_entities():
 
 
 def test_window_path_quoted_attr_windows_fall_back():
-    """Windows containing quotes (attributes) are rejected by the batch
-    window scanner and arrive as per-record items; results still equal
-    the record path."""
+    """Windows containing quoted attributes whose values hold no '<' or
+    '>' are clean and arrive as window items; results equal the record
+    path. (Before safe-tag windows, such windows fell back to per-record
+    items, hence the name.)"""
     schema = T.StructType(
         [T.StructField("_a", T.StringType()), T.StructField("i", T.LongType())]
     )
@@ -498,10 +499,10 @@ def test_window_path_quoted_attr_windows_fall_back():
 
 
 def test_window_path_learns_on_dirty_window_corpora():
-    """Review r7: attribute corpora make EVERY window quote-dirty, so all
-    records arrive as per-record items — the window consumer must learn
-    the pattern there too, or the scan silently runs the row tier
-    forever (~10x)."""
+    """Review r7: a corpus whose every tag is unsafe ('>' inside each
+    attribute value) makes EVERY window dirty, so all records arrive as
+    per-record items — the window consumer must learn the pattern there
+    too, or the scan silently runs the row tier forever (~10x)."""
     import os
     import tempfile
 
@@ -512,7 +513,7 @@ def test_window_path_learns_on_dirty_window_corpora():
     )
     opts = XmlOptions.from_dict({"rowTag": "r"})
     doc = "<root>" + "".join(
-        f'<r a="v{k}"><i>{k}</i></r>' for k in range(2000)
+        f'<r a="v>{k}"><i>{k}</i></r>' for k in range(2000)
     ) + "</root>"
     d = tempfile.mkdtemp()
     p = os.path.join(d, "t.xml")
@@ -626,6 +627,54 @@ def test_unpushed_flat_scan_served_by_window_tier(tmp_path, monkeypatch):
     assert not any(t.startswith("row_") and n for t, n in tiers.items())
 
 
+def test_quoted_attribute_corpus_served_by_window_tier(tmp_path, monkeypatch):
+    """Quoted attribute values without '<' or '>' keep windows clean, so
+    an attribute corpus runs the learned pattern over whole windows."""
+    stats = tmp_path / "stats"
+    stats.mkdir()
+    monkeypatch.setenv(D._TIER_STATS_ENV, str(stats))
+    schema = T.StructType(
+        [T.StructField("_a", T.StringType()), T.StructField("i", T.LongType())]
+    )
+    doc = "<root>" + "".join(
+        f'<r a="v{k}"><i>{k}</i></r>' for k in range(2000)
+    ) + "</root>"
+    got = _reader_read(tmp_path, doc, schema, {"rowTag": "r"})
+    assert got == [{"_a": f"v{k}", "i": k} for k in range(2000)]
+    tiers = _tier_rows(stats)
+    assert tiers.get("columnar_window") == 2000, tiers
+    assert not any(t.startswith("row_") and n for t, n in tiers.items())
+
+
+def test_quoted_attribute_window_read_equals_row_path(tmp_path, monkeypatch):
+    """Apostrophes inside double-quoted values and in text: the window
+    tier's rows equal the exact row path's."""
+    stats = tmp_path / "stats"
+    stats.mkdir()
+    monkeypatch.setenv(D._TIER_STATS_ENV, str(stats))
+    schema = T.StructType(
+        [
+            T.StructField("_a", T.StringType()),
+            T.StructField("_b", T.LongType()),
+            T.StructField("k", T.LongType()),
+            T.StructField("t", T.StringType()),
+        ]
+    )
+    doc = "<root>" + "".join(
+        f'<r a="it\'s v{k}" b="{k % 5}"><k>{k}</k><t>don\'t {k}</t></r>'
+        for k in range(3000)
+    ) + "</root>"
+    got = _reader_read(tmp_path, doc, schema, {"rowTag": "r"})
+    tiers = _tier_rows(stats)
+    assert tiers.get("columnar_window") == 3000, tiers
+    exact = _reader_read(
+        tmp_path, doc, schema, {"rowTag": "r", "arrowBatches": "false"}
+    )
+    assert len(got) == 3000
+    assert got == exact
+    assert got[1] == {"_a": "it's v1", "_b": 1, "k": 1, "t": "don't 1"}
+
+
 def test_arrow_pushed_flat_scan_served_by_columnar_tier(tmp_path, monkeypatch):
     from pyspark.sql import datasource as ds
 
@@ -655,8 +704,7 @@ def test_arrow_pushed_flat_scan_served_by_columnar_tier(tmp_path, monkeypatch):
 
 
 def test_simple_struct_scan_served_by_columnar_tier(tmp_path, monkeypatch):
-    """Attribute-only struct children (quote-bearing, so every record
-    takes the per-record ladder) are served by the learned record
+    """Attribute-only struct children are served by the learned record
     pattern, never by the row tiers."""
     stats = tmp_path / "stats"
     stats.mkdir()

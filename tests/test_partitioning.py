@@ -309,6 +309,114 @@ def test_batch_scan_randomized_differential(tmp_path, monkeypatch):
         assert len(fast) >= 400
 
 
+def test_batch_scan_quoted_attribute_differential(tmp_path, monkeypatch):
+    """Quote-bearing shapes: runs of safe quoted-attribute rows (the
+    window scan admits them) between tags it must cut at ('>', '</r>'
+    or '<r>' inside a value, an unbalanced quote) and the usual rejection
+    shapes. Records equal the forced per-record path at every split
+    size, and the window scan really ran."""
+    import random
+
+    from spark_xml_spark.xmlcore import tokenizer as tk
+
+    rng = random.Random(20261017)
+    safe = [
+        '<r a="{i}" b=\'x{i}\'><a>{i}</a></r>',
+        '<r x="a\'b" y=\'c"d\'><a>{i}</a></r>',
+        '<r><a>it\'s "{i}" > 0</a></r>',
+        '<r k="{i}"><c d="e"/><a>{i}</a></r>',
+    ]
+    # the window is cut at these, so windows run between them
+    cutting = [
+        '<r a="v>{i}"><a>{i}</a></r>',
+        '<r a="</r>"><a>{i}</a></r>',
+        "<r a='<r>{i}'><a>{i}</a></r>",
+        '<r><!-- </r> "q" --><a>{i}</a></r>',
+        "<r><![CDATA[</r> 'q']]><a>{i}</a></r>",
+    ]
+    # these reject a whole window (the rest of this small file goes per
+    # record), so they only appear in the last third
+    misaligned = [
+        '<r a="{i}"/>',
+        '<r k="o"><r k="i"><a>{i}</a></r><a>outer</a></r>',
+    ]
+    parts = ['<?xml version="1.0"?>', "<rows>"]
+    i = 0
+    for block in range(60):
+        for _ in range(rng.randrange(60)):
+            ws = rng.choice(["", "\n", "  "])
+            parts.append(ws + rng.choice(safe).format(i=i))
+            i += 1
+        odd = cutting + (misaligned if block >= 40 else [])
+        parts.append(rng.choice(odd).format(i=i))
+        i += 1
+        if block == 20:
+            parts.append('<r a="unbalanced><a>x</a></r>')
+    parts.append("</rows>")
+    p = tmp_path / "quoted.xml"
+    p.write_text("\n".join(parts))
+    for target in (256, 1777, 16384, 1 << 30):
+        splits = tk.plan_splits(str(p), target_split_size=target)
+        fast = [r for s in splits for r in tk.scan_split(s, "r")]
+        monkeypatch.setattr(
+            tk, "_batch_scan_window", lambda b, sp, ep, pos: (None, pos, True)
+        )
+        slow = [r for s in splits for r in tk.scan_split(s, "r")]
+        monkeypatch.undo()
+        assert fast == slow, target
+        assert len(fast) >= i // 2
+    (whole,) = tk.plan_splits(str(p), target_split_size=1 << 30)
+    items = list(tk.scan_split_windows(whole, "r"))
+    assert sum(len(it[2]) for it in items if it[0] == "win") >= i // 4
+
+    # an all-safe quoted document arrives almost entirely in windows
+    p2 = tmp_path / "safe.xml"
+    p2.write_text(
+        '<?xml version="1.0"?>\n<rows>\n'
+        + "\n".join(rng.choice(safe).format(i=k) for k in range(4000))
+        + "\n</rows>\n"
+    )
+    (whole,) = tk.plan_splits(str(p2), target_split_size=1 << 30)
+    items = list(tk.scan_split_windows(whole, "r"))
+    n_win = sum(len(it[2]) for it in items if it[0] == "win")
+    n_rec = sum(1 for it in items if it[0] == "rec")
+    assert n_win + n_rec == 4000
+    assert n_win >= 0.9 * 4000, (n_win, n_rec)
+
+
+def test_quoted_scan_memory_bounded(tmp_path):
+    """A whole-file scan of a 16 MB quoted-attribute document keeps its
+    peak allocation near one chunk plus a record, as the module
+    docstring promises, not proportional to the file or the window."""
+    import tracemalloc
+
+    from spark_xml_spark.xmlcore import tokenizer as tk
+
+    p = tmp_path / "big.xml"
+    rows = 0
+    with open(p, "w") as fh:
+        fh.write('<?xml version="1.0"?>\n<rows>\n')
+        block = "".join(
+            f'<r id="{k}" s=\'x y\'><a b="q">it\'s {k}</a><c/></r>\n'
+            for k in range(10000)
+        )
+        while fh.tell() < 16 * 1024 * 1024:
+            fh.write(block)
+            rows += 10000
+        fh.write("</rows>\n")
+    (whole,) = tk.plan_splits(str(p), target_split_size=1 << 30)
+    seen = 0
+    tracemalloc.start()
+    try:
+        for item in tk.scan_split_windows(whole, "r"):
+            seen += len(item[2]) if item[0] == "win" else 1
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert seen == rows
+    assert peak < 10 * tk._CHUNK, peak
+
+
 def test_pack_splits_bins_small_files(tmp_path):
     """Spark FilePartition semantics: many small files bin-pack into few
     partitions under the open-cost accounting; large byte-range splits
