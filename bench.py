@@ -71,7 +71,8 @@ so the summary must live there):
   loadavg_start/end  host 1/5/15-min load — the cross-session noise
                    context every reading needs on a shared VM
 The full untruncated payload is also written to BENCH_LOCAL.json in the
-repo root.
+repo root when the run is settled; an unsettled run writes it to
+BENCH_LOCAL.unsettled.json instead and leaves the committed headline alone.
 """
 
 from __future__ import annotations
@@ -100,6 +101,23 @@ _STREAMING = {
     "stream_simhash",
     "stream_kmv",
 }
+
+
+ARTIFACT = "BENCH_LOCAL.json"
+UNSETTLED_ARTIFACT = "BENCH_LOCAL.unsettled.json"
+
+
+def write_artifact(directory: str, line: str, settled: bool) -> str:
+    """Write one suite run's payload ``line`` into ``directory`` and return
+    the file's path: a settled run replaces the headline ``ARTIFACT``; an
+    unsettled one writes ``UNSETTLED_ARTIFACT`` for inspection and never
+    touches the headline."""
+    path = os.path.join(
+        directory, ARTIFACT if settled else UNSETTLED_ARTIFACT
+    )
+    with open(path, "w") as fh:
+        fh.write(line + "\n")
+    return path
 
 
 def main() -> None:
@@ -575,8 +593,7 @@ def main() -> None:
     line = json.dumps(payload)
     repo = os.path.dirname(os.path.abspath(__file__))
     try:
-        with open(os.path.join(repo, "BENCH_LOCAL.json"), "w") as fh:
-            fh.write(line + "\n")
+        write_artifact(repo, line, settled)
     except OSError:
         pass
     # ---- settled-band run log (VERDICT r16 task 4): BOARD.md must
@@ -615,21 +632,21 @@ def main() -> None:
         # Unsettled runs must never become the committed headline
         # (VERDICT r15 task 1: the r15 final artifact, started at
         # loadavg 3.35, overwrote a settled 98.96 s run and BOARD.md
-        # faithfully headlined the round's worst weather). The artifact
-        # stays ON DISK (stamped settled:false) for inspection; the
-        # drift test will flag the tree until a settled run replaces it
-        # or the file is restored.
+        # faithfully headlined the round's worst weather). Its payload
+        # went to the UNSETTLED_ARTIFACT side file (stamped
+        # settled:false) for inspection; BENCH_LOCAL.json is untouched.
         print(
             f"bench: UNSETTLED run (loadavg_start {load_start}, caps "
-            f"1-min {settled_cap} / 5-min {settled_cap5}) — self-commit "
-            "refused; re-run on a quiet host or restore BENCH_LOCAL.json",
+            f"1-min {settled_cap} / 5-min {settled_cap5}) — payload in "
+            f"{UNSETTLED_ARTIFACT}, {ARTIFACT} left as it was; re-run on "
+            "a quiet host",
             file=sys.stderr,
         )
     elif os.environ.get("SPARK_GRAFT_BENCH_NO_COMMIT") != "1":
         import subprocess
 
         try:
-            art = "BENCH_LOCAL.json"
+            art = ARTIFACT
             # BOARD.md is generated FROM BENCH_LOCAL.json (VERDICT r14
             # task 1): re-render it in the SAME commit so a bench re-run
             # can never orphan the board's cited numbers. A sync failure

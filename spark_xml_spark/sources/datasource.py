@@ -7,7 +7,8 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
 
 - ``partitions()`` plans byte-range file splits on the driver (the HDFS-split
   analogue); each ``read(partition)`` task scans only its range with the
-  record-ownership rule, then parses records against the requested schema.
+  record-ownership rule through :func:`read_partition`, the one partition
+  reader behind batch and stream scans alike.
 - ``schema()`` resolves the user-provided ``schema`` option or runs sampled
   inference (the reference's 2-pass inferred-read semantics,
   XmlRelation.scala:43-49). For cluster-distributed inference use
@@ -18,8 +19,8 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
 
 Scale notes: split planning is O(#files) driver metadata only; tasks never
 materialize more than one record + a chunk buffer; no shuffle anywhere on
-the read path; parsed rows flow straight into Tungsten via Spark's tuple
-conversion.
+the read path; every scan yields Arrow record batches, so no per-row Python
+object crosses into the JVM.
 """
 
 from __future__ import annotations
@@ -105,15 +106,6 @@ class _TierTally:
                 fh.write(lines)
         except OSError:
             pass  # diagnostics must never fail the scan
-
-
-def _counted(rows, tally: _TierTally, tier: str) -> Iterator:
-    """Yield ``rows``, booking their count to ``tier`` once exhausted."""
-    n = 0
-    for row in rows:
-        n += 1
-        yield row
-    tally.add(tier, n)
 
 
 def _sidecar_dir() -> str:
@@ -300,13 +292,20 @@ def _strip_scheme_local(p: str) -> str:
 
 @dataclass
 class XmlInputPartition(InputPartition):
-    # One task reads these splits sequentially. Small files are bin-packed
-    # Spark-style (FilePartition/maxSplitBytes semantics) so a million
-    # 1 MB files does not mean a million tasks; a large file's byte-range
-    # splits stay one per partition. ``pvals`` carries the Hive-style
+    # One task reads these splits sequentially; each is
+    # (path, start, end, compression, whole_file, eof). ``eof`` is the
+    # byte the file is treated as ending at: -1 for the real end (batch
+    # scans), the size recorded in the committed offset for a stream
+    # micro-batch, so a file that grew after the snapshot replays
+    # identical rows. Small files are bin-packed Spark-style
+    # (FilePartition/maxSplitBytes semantics) so a million 1 MB files
+    # does not mean a million tasks; a large file's byte-range splits
+    # stay one per partition. ``pvals`` carries the Hive-style
     # partition-directory values shared by every split in the partition
-    # (splits are packed within one partition-value group only).
-    splits: Tuple[Tuple[str, int, int, Optional[str], bool], ...]
+    # (splits are packed within one partition-value group only), typed
+    # as the schema's trailing ``len(pvals)`` fields. No splits marks an
+    # empty stream micro-batch (Spark requires >= 1 partition).
+    splits: Tuple[Tuple[str, int, int, Optional[str], bool, int], ...]
     pvals: Tuple = ()
 
 
@@ -344,58 +343,43 @@ def _pack_splits(splits, max_split_bytes: int, open_cost: int,
         parts.append(cur)
     return [
         XmlInputPartition(
-            tuple((s.path, s.start, s.end, s.compression, s.whole_file) for s in g),
+            tuple(
+                (s.path, s.start, s.end, s.compression, s.whole_file, s.eof)
+                for s in g
+            ),
             pvals,
         )
         for g in parts
     ]
 
 
-def _tz_fixer(schema: T.StructType):
-    """Build a row post-processor attaching UTC tzinfo to naive datetimes so
-    Spark interprets them as instants regardless of session timezone.
-    Returns None when the schema holds no timestamps (zero-cost path)."""
-    import datetime as dt
+def _open_cost(opts: dict) -> int:
+    return int(get_option(opts, "openCostBytes") or 4 * 1024 * 1024)
 
-    utc = dt.timezone.utc
 
-    def needs(d: T.DataType) -> bool:
-        if isinstance(d, T.TimestampType):
-            return True
-        if isinstance(d, T.StructType):
-            return any(needs(f.dataType) for f in d.fields)
-        if isinstance(d, T.ArrayType):
-            return needs(d.elementType)
-        if isinstance(d, T.MapType):
-            return needs(d.valueType)
-        return False
-
-    if not needs(schema):
-        return None
-
-    def fix_value(v, d):
-        if v is None:
-            return None
-        if isinstance(d, T.TimestampType):
-            return v.replace(tzinfo=utc) if v.tzinfo is None else v
-        if isinstance(d, T.StructType):
-            return tuple(
-                fix_value(x, f.dataType) if needs(f.dataType) else x
-                for x, f in zip(v, d.fields)
-            )
-        if isinstance(d, T.ArrayType):
-            return [fix_value(x, d.elementType) for x in v]
-        if isinstance(d, T.MapType):
-            return {k: fix_value(x, d.valueType) for k, x in v.items()}
-        return v
-
-    def fix_row(row: tuple) -> tuple:
-        return tuple(
-            fix_value(v, f.dataType) if needs(f.dataType) else v
-            for v, f in zip(row, schema.fields)
-        )
-
-    return fix_row
+def _split_target(opts: dict, open_cost: int, listed) -> int:
+    """Bytes per split and per packed partition for the files ``listed``
+    as (path, size): the ``targetSplitSize``/``maxPartitionBytes`` option,
+    else Spark's maxSplitBytes, min(maxPartitionBytes,
+    max(openCostInBytes, totalBytes/minPartitionNum)) — small corpora
+    split finer to feed every core, huge corpora cap at 128 MB per task,
+    and the open cost keeps a million tiny files from becoming a million
+    tasks."""
+    explicit = get_option(opts, "targetSplitSize", "maxPartitionBytes")
+    if explicit is not None:
+        return int(explicit)
+    total = open_cost  # avoid zero; matches Spark's +openCost/file
+    for _f, size in listed or ():
+        total += size + open_cost
+    par = int(get_option(opts, "minPartitions") or 0)
+    if par <= 0:
+        # split planning runs in Spark's Python planner worker, where
+        # getActiveSession() is None — read_xml injects the session's
+        # defaultParallelism as minPartitions; raw format() reads fall
+        # back to the planner host's cores
+        par = os.cpu_count() or 8
+    bytes_per_core = total // max(par, 1)
+    return min(128 * 1024 * 1024, max(open_cost, bytes_per_core))
 
 
 # --- Arrow batch output ----------------------------------------------------
@@ -426,6 +410,8 @@ def _arrow_type(dt: T.DataType):
     if isinstance(dt, T.DateType):
         return pa.date32()
     if isinstance(dt, T.TimestampType):
+        # the parser yields naive UTC datetimes; Arrow stores a naive
+        # value as UTC, so Spark reads instants in any session zone
         return pa.timestamp("us", tz="UTC")
     if isinstance(dt, T.DecimalType):
         return pa.decimal128(dt.precision, dt.scale)
@@ -437,13 +423,36 @@ def _arrow_type(dt: T.DataType):
         return pa.struct([pa.field(f.name, _arrow_type(f.dataType)) for f in dt.fields])
     if isinstance(dt, T.MapType):
         return pa.map_(_arrow_type(dt.keyType), _arrow_type(dt.valueType))
+    if isinstance(dt, T.NullType):
+        return pa.null()
     raise TypeError(f"no arrow mapping for {dt.simpleString()}")
+
+
+def _arrow_schema(schema: T.StructType):
+    """The Arrow schema a scan of ``schema`` emits. Readers build it
+    when they are constructed, so a column type with no Arrow mapping
+    fails the query at planning time, naming the column."""
+    import pyarrow as pa
+
+    fields = []
+    for f in schema.fields:
+        try:
+            fields.append(pa.field(f.name, _arrow_type(f.dataType)))
+        except TypeError as exc:
+            raise TypeError(
+                f"xml-graft cannot read column {f.name!r} of type "
+                f"{f.dataType.simpleString()}: {exc}"
+            ) from None
+    return pa.schema(fields)
 
 
 def _struct_fixer(dt: T.DataType):
     """Converter turning parser output (structs as tuples, maps as dicts)
     into what pyarrow accepts (structs as dicts, maps as item lists), or
-    None when the subtree needs no conversion."""
+    None when the subtree needs no conversion. A ``NullType`` value is
+    always null (the parser casts its text as a string)."""
+    if isinstance(dt, T.NullType):
+        return lambda v: None
     if isinstance(dt, T.StructType):
         subs = [(f.name, _struct_fixer(f.dataType)) for f in dt.fields]
 
@@ -479,15 +488,12 @@ _ARROW_BATCH_ROWS = 8192
 
 
 def _rows_to_arrow_batches(rows, schema: T.StructType, batch_size: int):
-    """Yield pyarrow.RecordBatch objects from row tuples. Raises on the
-    FIRST batch if the schema/value shapes don't map — callers fall back to
-    tuple mode before anything has been emitted."""
+    """Yield pyarrow.RecordBatch objects of up to ``batch_size`` rows
+    from row tuples."""
     import pyarrow as pa
 
     fields = schema.fields
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
-    )
+    arrow_schema = _arrow_schema(schema)
     fixers = [_struct_fixer(f.dataType) for f in fields]
     ncols = len(fields)
     while True:
@@ -746,16 +752,16 @@ def _assemble(cols, fast, schema, arrow_schema, guards, nrec):
     return arrays
 
 
-def _row_batches(batch, schema: T.StructType, xopts: XmlOptions,
-                 batch_size: int, fix) -> list:
-    """The exact row path for one record batch: the generic parser (and
-    its parse-mode policy), the timezone fix-up, then Arrow assembly.
-    Every columnar tier re-runs a batch here when it can't prove its own
+def _row_batches(records, schema: T.StructType, xopts: XmlOptions,
+                 batch_size: int = _ARROW_BATCH_ROWS):
+    """The exact row path: the generic parser (and its parse-mode
+    policy), then Arrow assembly. Schemas the columnar scan cannot serve
+    stream every record through here (tier ``row_arrow``), and the
+    columnar scan re-runs a batch here when it can't prove its own
     result equivalent."""
-    rows = parser.parse_records(iter(batch), schema, xopts)
-    if fix is not None:
-        rows = (fix(row) for row in rows)
-    return list(_rows_to_arrow_batches(rows, schema, batch_size))
+    return _rows_to_arrow_batches(
+        parser.parse_records(iter(records), schema, xopts), schema, batch_size
+    )
 
 
 def _columnar_batches(
@@ -792,10 +798,7 @@ def _columnar_batches(
     import pyarrow as pa
 
     fast = parser.FastFlatParser.try_build(schema, xopts)
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in schema.fields]
-    )
-    fix = _tz_fixer(schema)
+    arrow_schema = _arrow_schema(schema)
     guards = _cast_guards(xopts)
 
     def emit_records(batch):
@@ -819,7 +822,7 @@ def _columnar_batches(
         if arrays is not None:
             tally.add("columnar_flat", len(batch), perf_counter() - t0)
             return [pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)]
-        out = _row_batches(batch, schema, xopts, batch_size, fix)
+        out = list(_row_batches(batch, schema, xopts, batch_size))
         tally.add("row_fallback", len(batch), perf_counter() - t0)
         return out
 
@@ -900,11 +903,11 @@ def _columnar_batches(
 # --- filter pushdown -------------------------------------------------------
 # Spark 4.1's Python DataSource API delivers Catalyst's pushable predicates
 # via DataSourceReader.pushFilters. Accepted filters are REMOVED from the
-# Spark plan, so evaluation must be exact: predicates run on the very row
-# tuples the scan emits (same values Spark would have filtered), with SQL
-# three-valued null semantics folded in (null comparisons -> row dropped,
-# matching a post-scan Filter). Payoff at scale: filtered rows never leave
-# the Python worker — no Arrow transfer, no JVM processing.
+# Spark plan, so evaluation must be exact: predicates run as Arrow masks on
+# the very batches the scan emits (same values Spark would have filtered),
+# with SQL three-valued null semantics folded in (null comparisons -> row
+# dropped, matching a post-scan Filter). Payoff at scale: filtered rows
+# never leave the Python worker — no Arrow transfer, no JVM processing.
 
 _PUSH_SCALARS = (
     T.StringType,
@@ -944,86 +947,17 @@ def _push_field(attr, schema: T.StructType, corrupt_col: str):
     return i, f
 
 
-def _compile_filter(flt, schema: T.StructType, corrupt_col: str):
-    """Compile one pushed Filter into row-tuple -> bool with SQL null
-    semantics, or None when the filter can't be evaluated exactly here."""
-    from pyspark.sql import datasource as ds
-
-    if isinstance(flt, ds.Not):
-        child = flt.child
-        sub = _compile_filter(child, schema, corrupt_col)
-        if sub is None:
-            return None
-        if isinstance(child, (ds.IsNull, ds.IsNotNull, ds.EqualNullSafe)):
-            # these child predicates are never UNKNOWN: plain negation
-            return lambda row: not sub(row)
-        if not hasattr(child, "attribute"):
-            return None  # Not(Not(..)) / composite child: leave to Spark
-        # NOT(pred) on a null operand is UNKNOWN -> row dropped
-        loc = _push_field(child.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        return lambda row: row[i] is not None and not sub(row)
-    if isinstance(flt, ds.IsNull):
-        loc = _push_field(flt.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        return lambda row: row[i] is None
-    if isinstance(flt, ds.IsNotNull):
-        loc = _push_field(flt.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        return lambda row: row[i] is not None
-    if not hasattr(flt, "attribute") or not hasattr(flt, "value"):
-        return None  # unknown/future filter class: leave to Spark
-    loc = _push_field(flt.attribute, schema, corrupt_col)
-    if loc is None:
-        return None
-    i, field = loc
-    v = flt.value
-    if isinstance(flt, ds.EqualNullSafe):
-        return lambda row: (row[i] is None and v is None) or (
-            row[i] is not None and row[i] == v
-        )
-    if v is None:
-        return None  # null literal in other comparators: UNKNOWN everywhere
-    str_field = isinstance(field.dataType, T.StringType)
-    if isinstance(flt, ds.EqualTo):
-        return lambda row: row[i] is not None and row[i] == v
-    if isinstance(flt, ds.GreaterThan):
-        return lambda row: row[i] is not None and row[i] > v
-    if isinstance(flt, ds.GreaterThanOrEqual):
-        return lambda row: row[i] is not None and row[i] >= v
-    if isinstance(flt, ds.LessThan):
-        return lambda row: row[i] is not None and row[i] < v
-    if isinstance(flt, ds.LessThanOrEqual):
-        return lambda row: row[i] is not None and row[i] <= v
-    if isinstance(flt, ds.In):
-        if any(x is None for x in flt.value):
-            # x IN (.., NULL) is UNKNOWN for every non-member x; under a
-            # parent NOT that must drop ALL rows, which the Not wrapper
-            # above cannot express -> refuse to push, Spark evaluates it
-            return None
-        vals = set(flt.value)
-        return lambda row: row[i] is not None and row[i] in vals
-    if isinstance(flt, ds.StringStartsWith) and str_field:
-        return lambda row: row[i] is not None and row[i].startswith(v)
-    if isinstance(flt, ds.StringEndsWith) and str_field:
-        return lambda row: row[i] is not None and row[i].endswith(v)
-    if isinstance(flt, ds.StringContains) and str_field:
-        return lambda row: row[i] is not None and v in row[i]
-    return None
-
-
 def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
     """Compile one pushed Filter into RecordBatch -> BooleanArray (no
-    nulls: null comparisons are filled False, matching _compile_filter's
-    row semantics exactly — both follow IEEE comparison on doubles, so
-    the columnar and row pushdown paths always agree). None when the
-    filter can't be expressed with pyarrow.compute."""
+    nulls: null comparisons are filled False, the row dropped as by a
+    post-scan Filter). None when the filter can't be evaluated exactly
+    here; it then stays in the Spark plan.
+
+    NaN rule: Spark orders NaN above every other value and treats
+    NaN = NaN as true, while Arrow compares floats by IEEE rules (NaN is
+    unordered and unequal to itself). So comparisons, ``In`` and
+    ``EqualNullSafe`` on ``float``/``double`` fields are declined rather
+    than emulated; ``IsNull``/``IsNotNull`` are pushed for every type."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import datasource as ds
@@ -1063,6 +997,8 @@ def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
         return None
     i, field = loc
     v = flt.value
+    if isinstance(field.dataType, (T.DoubleType, T.FloatType)):
+        return None  # NaN ordering and equality: see the docstring
     if isinstance(flt, ds.EqualNullSafe):
         if v is None:
             return lambda b: pc.is_null(b.column(i))
@@ -1081,7 +1017,10 @@ def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
         return lambda b: pc.fill_null(cmp(b.column(i), v), False)
     if isinstance(flt, ds.In):
         if any(x is None for x in flt.value):
-            return None  # see _compile_filter: NULL member breaks NOT(In)
+            # x IN (.., NULL) is UNKNOWN for every non-member x; under a
+            # parent NOT that must drop ALL rows, which the Not wrapper
+            # above cannot express -> refuse to push, Spark evaluates it
+            return None
         try:
             value_set = pa.array(
                 list(flt.value), type=_arrow_type(field.dataType)
@@ -1135,6 +1074,140 @@ def _raw_prefilter(filters, schema: T.StructType, corrupt_col: str):
     return reject
 
 
+def _filter_mask(batch, masks):
+    """AND of the compiled pushed-filter masks over ``batch``; None when
+    there are none."""
+    import pyarrow.compute as pc
+
+    mask = None
+    for m in masks:
+        mask = m(batch) if mask is None else pc.and_(mask, m(batch))
+    return mask
+
+
+def _pvalue_batch(raw_tuples, fields):
+    """One Arrow row per Hive partition-value tuple: column ``j`` holds
+    the raw directory strings (None for __HIVE_DEFAULT_PARTITION__) cast
+    to the DECLARED type of ``fields[j]`` — the type the scan's constant
+    columns carry and pushed partition filters compare against."""
+    import pyarrow as pa
+
+    arrow_schema = _arrow_schema(T.StructType(list(fields)))
+    arrays = []
+    for j, f in enumerate(fields):
+        raw = pa.array([t[j] for t in raw_tuples], pa.string())
+        try:
+            arrays.append(raw.cast(arrow_schema.field(j).type))
+        except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as exc:
+            raise ValueError(
+                f"partition column {f.name!r}: directory values cannot be "
+                f"read as {f.dataType.simpleString()}: {exc}"
+            ) from None
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+
+def _typed_pvals(pbatch) -> List[Tuple]:
+    """The rows of a :func:`_pvalue_batch` as Python value tuples."""
+    return list(zip(*(c.to_pylist() for c in pbatch.columns)))
+
+
+def _attach_pvals(batch, pvals: Tuple, arrow_schema):
+    """Append the partition-directory constants to a batch of the data
+    columns: the parser never sees these columns (they are not in the
+    file content) — the analogue of Spark appending partition values
+    outside the FileFormat reader."""
+    import pyarrow as pa
+
+    first, n = batch.num_columns, batch.num_rows
+    arrays = list(batch.columns) + [
+        pa.repeat(pa.scalar(v, arrow_schema.field(first + j).type), n)
+        for j, v in enumerate(pvals)
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+
+def read_partition(
+    partition: XmlInputPartition, schema: T.StructType, xopts: XmlOptions,
+    pushed=(),
+) -> Iterator:
+    """The one partition reader behind batch and stream scans: yield the
+    Arrow record batches of ``schema`` for ``partition``'s splits (each
+    read up to its replay ``eof``). The schema's last
+    ``len(partition.pvals)`` fields are the partition columns, attached
+    as constants; the rest is the data schema the parser fills.
+    ``pushed`` are the Filters pushFilters accepted for the data columns.
+
+    Batches come from the columnar scan over the tokenizer's windows
+    (``_columnar_batches``) when the data schema allows it, else from the
+    exact row path (tier ``row_arrow``); every batch, columnar or row, is
+    masked by the pushed filters."""
+    tally = _TierTally()
+    if _tier_stats_dir():
+        # Pre-warm the heavy lazy imports OUTSIDE any timed region,
+        # booked to an explicit "setup" tally (once per worker
+        # process; ~0 on reuse). Without this, each worker's first
+        # timed batch absorbed the one-time pyarrow.compute import
+        # (~0.3s), so a tiny tier could report secs wildly out of
+        # proportion to its rows and corrupt tier economics.
+        from time import perf_counter
+
+        t0 = perf_counter()
+        import pyarrow  # noqa: F401
+        import pyarrow.compute  # noqa: F401
+
+        # pyarrow's first pa.array() lazily imports pandas through
+        # its _pandas_api shim (~0.35s/worker) — trigger it here or
+        # the first timed cast batch absorbs it
+        pyarrow.array(["x"], pyarrow.string())
+        tally.add("setup", 0, perf_counter() - t0)
+    pvals = partition.pvals
+    dschema = T.StructType(schema.fields[: len(schema.fields) - len(pvals)])
+    corrupt = xopts.column_name_of_corrupt_record
+    items = (
+        item
+        for path, start, end, compression, whole_file, eof in partition.splits
+        for item in tokenizer.scan_split_windows(
+            tokenizer.FileSplit(path, start, end, compression, whole_file, eof),
+            xopts.row_tag,
+            xopts.charset,
+        )
+    )
+    if pushed and xopts.mode != "FAILFAST":
+        # raw-text reject shortcut: skip parsing records that can't
+        # match (FAILFAST keeps parsing everything so malformed
+        # records still raise exactly as an unfiltered scan would)
+        reject = _raw_prefilter(pushed, dschema, corrupt)
+        if reject is not None:
+            items = (
+                ("rec", r)
+                for r in tokenizer.window_records(items)
+                if not reject(r)
+            )
+    columnar = _columnar_ok(dschema, xopts)
+    if columnar:
+        batches = _columnar_batches(
+            items, dschema, xopts, _ARROW_BATCH_ROWS, tally
+        )
+    else:
+        batches = _row_batches(tokenizer.window_records(items), dschema, xopts)
+    masks = [_compile_filter_arrow(f, dschema, corrupt) for f in pushed]
+    arrow_schema = _arrow_schema(schema)
+    try:
+        for batch in batches:
+            if not columnar:
+                tally.add("row_arrow", batch.num_rows)
+            mask = _filter_mask(batch, masks)
+            if mask is not None:
+                batch = batch.filter(mask)
+                if not batch.num_rows:
+                    continue
+            if pvals:
+                batch = _attach_pvals(batch, pvals, arrow_schema)
+            yield batch
+    finally:
+        tally.flush()
+
+
 class XmlReader(DataSourceReader):
     def __init__(self, options: dict, schema: T.StructType):
         self._opts_dict = dict(options)
@@ -1150,14 +1223,14 @@ class XmlReader(DataSourceReader):
                 self._path = self._opts_dict.get("path")
         if not self._path:
             raise ValueError("path option is required for the xml data source")
+        _arrow_schema(schema)  # an unmappable column type fails planning
 
     def _discover(self, need_files: bool = False):
         """Driver-side Hive-style partition discovery, cached on self.
         pushFilters (to classify partition filters) and partitions() (to
         group/prune) both need it; partitions() drops the FILE list
         afterwards so executor pickles stay slim, while the small
-        ``_pcols`` result stays cached — executors consult it without
-        ever touching the filesystem."""
+        ``_pcols`` result stays cached."""
         if getattr(self, "_pcols", None) is None or (
             need_files and getattr(self, "_pfiles", None) is None
         ):
@@ -1200,9 +1273,7 @@ class XmlReader(DataSourceReader):
 
     def partitions(self) -> List[InputPartition]:
         xopts = XmlOptions.from_dict(self._opts_dict)
-        open_cost = int(
-            get_option(self._opts_dict, "openCostBytes") or 4 * 1024 * 1024
-        )
+        open_cost = _open_cost(self._opts_dict)
         try:
             pfiles, pcols = self._discover(need_files=True)
         except OSError as exc:
@@ -1218,12 +1289,10 @@ class XmlReader(DataSourceReader):
                 raise
             pfiles, pcols = None, []
         if pcols:
-            return self._partitions_partitioned(
-                xopts, open_cost, pfiles, pcols
-            )
+            return self._partitions_partitioned(xopts, open_cost, pfiles)
         listed = [(f, sz) for f, sz, _ in pfiles] if pfiles is not None else None
         sizes = dict(listed) if listed is not None else {}
-        target = self._split_target(open_cost, listed)
+        target = _split_target(self._opts_dict, open_cost, listed)
         out = _pack_splits(
             tokenizer.plan_splits(self._path, xopts.charset, target, files=listed),
             target,
@@ -1233,69 +1302,40 @@ class XmlReader(DataSourceReader):
         self._pfiles = None  # keep executor pickles slim
         return out
 
-    def _split_target(self, open_cost: int, listed) -> int:
-        explicit = get_option(
-            self._opts_dict, "targetSplitSize", "maxPartitionBytes"
-        )
-        if explicit is not None:
-            return int(explicit)
-        # Spark's maxSplitBytes: min(maxPartitionBytes,
-        # max(openCostInBytes, totalBytes/minPartitionNum)) — small corpora
-        # split finer to feed every core, huge corpora cap at 128 MB per
-        # task, and the open cost keeps a million tiny files from becoming
-        # a million tasks.
-        total = open_cost  # avoid zero; matches Spark's +openCost/file
-        for _f, size in listed or ():
-            total += size + open_cost
-        par = int(get_option(self._opts_dict, "minPartitions") or 0)
-        if par <= 0:
-            # split planning runs in Spark's Python planner worker, where
-            # getActiveSession() is None — read_xml injects the session's
-            # defaultParallelism as minPartitions; raw format() reads fall
-            # back to the planner host's cores
-            par = os.cpu_count() or 8
-        bytes_per_core = total // max(par, 1)
-        return min(128 * 1024 * 1024, max(open_cost, bytes_per_core))
-
     def _partitions_partitioned(
-        self, xopts, open_cost: int, pfiles, pcols
+        self, xopts, open_cost: int, pfiles
     ) -> List[InputPartition]:
         """Split planning for a Hive-partitioned layout: splits pack
         WITHIN one partition-value group (a task's rows share one value
         tuple), pushed partition filters prune whole groups before any
         byte is read (the 100 TB point of a partitioned layout), and the
-        surviving groups' typed values ride the partition objects."""
-        from spark_xml_spark.sources import partitions as pmod
-
+        surviving groups' values, typed as the schema declares them, ride
+        the partition objects."""
         attach = self._attach_cols()
-        pschema = T.StructType(
-            [
-                T.StructField(
-                    n,
-                    {"bigint": T.LongType(), "double": T.DoubleType()}.get(
-                        t, T.StringType()
-                    ),
-                )
-                for n, t in pcols
-            ]
-        )
-        preds = [
-            _compile_filter(f, pschema, "\x00none")
-            for f in getattr(self, "_ppushed", [])
-        ]
         groups: dict = {}
         for f, sz, pv in pfiles:
             groups.setdefault(pv, []).append((f, sz))
-        all_listed = [(f, sz) for f, sz, _ in pfiles]
-        target = self._split_target(open_cost, all_listed)
-        out: List[InputPartition] = []
-        for pv in sorted(
+        keys = sorted(
             groups, key=lambda t: tuple("" if v is None else v for v in t)
-        ):
-            typed = tuple(
-                pmod.typed_value(v, t) for v, (_n, t) in zip(pv, pcols)
-            )
-            if preds and not all(p(typed) for p in preds if p is not None):
+        )
+        typed: List[Tuple] = [()] * len(keys)
+        keep = [True] * len(keys)
+        if attach:
+            pfields = self._schema.fields[-len(attach):]
+            pbatch = _pvalue_batch(keys, pfields)
+            typed = _typed_pvals(pbatch)
+            pschema = T.StructType(pfields)
+            mask = _filter_mask(pbatch, [
+                _compile_filter_arrow(f, pschema, "\x00none")
+                for f in getattr(self, "_ppushed", [])
+            ])
+            if mask is not None:
+                keep = mask.to_pylist()
+        all_listed = [(f, sz) for f, sz, _ in pfiles]
+        target = _split_target(self._opts_dict, open_cost, all_listed)
+        out: List[InputPartition] = []
+        for pv, tv, ok in zip(keys, typed, keep):
+            if not ok:
                 continue  # pruned: no file in this group is opened
             listed = groups[pv]
             out.extend(
@@ -1306,162 +1346,17 @@ class XmlReader(DataSourceReader):
                     target,
                     open_cost,
                     dict(listed),
-                    pvals=typed if attach else (),
+                    pvals=tv,
                 )
             )
         self._pfiles = None  # keep executor pickles slim
         return out
 
     def read(self, partition: XmlInputPartition) -> Iterator:
-        tally = _TierTally()
-        gen = self._read_impl(partition, tally)
-        if _tier_stats_dir():
-            # Pre-warm the heavy lazy imports OUTSIDE any timed region,
-            # booked to an explicit "setup" tally (once per worker
-            # process; ~0 on reuse). Without this, each worker's first
-            # timed batch absorbed the one-time pyarrow.compute import
-            # (~0.3s), so a tiny tier could report secs wildly out of
-            # proportion to its rows and corrupt tier economics.
-            from time import perf_counter
-
-            t0 = perf_counter()
-            import pyarrow  # noqa: F401
-            import pyarrow.compute  # noqa: F401
-
-            # pyarrow's first pa.array() lazily imports pandas through
-            # its _pandas_api shim (~0.35s/worker) — trigger it here or
-            # the first timed cast batch absorbs it
-            pyarrow.array(["x"], pyarrow.string())
-            tally.add("setup", 0, perf_counter() - t0)
-            gen = self._flush_after(gen, tally)
-        pv = getattr(partition, "pvals", ())
-        if pv:
-            gen = self._attach_pvals(gen, pv)
-        yield from gen
-
-    def _flush_after(self, gen, tally) -> Iterator:
-        try:
-            yield from gen
-        finally:
-            tally.flush()
-
-    def _attach_pvals(self, gen, pv) -> Iterator:
-        """Append the partition-directory constants to every output row /
-        batch: the parser never sees these columns (they are not in the
-        file content), so tuples extend and Arrow batches gain constant
-        arrays — the analogue of Spark appending partition values outside
-        the FileFormat reader."""
-        import pyarrow as pa
-
-        attach = self._attach_cols()
-        pa_types = {"bigint": pa.int64(), "double": pa.float64()}
-        names = [f.name for f in self._data_schema().fields] + [
-            n for n, _ in attach
-        ]
-        for item in gen:
-            if isinstance(item, pa.RecordBatch):
-                arrays = list(item.columns)
-                for v, (_n, t) in zip(pv, attach):
-                    ptype = pa_types.get(t, pa.string())
-                    arrays.append(
-                        pa.nulls(item.num_rows, ptype)
-                        if v is None
-                        else pa.array([v] * item.num_rows, ptype)
-                    )
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-            else:
-                yield tuple(item) + pv
-
-    def _read_impl(self, partition: XmlInputPartition, tally) -> Iterator:
-        import itertools
-
-        xopts = XmlOptions.from_dict(self._opts_dict)
-        dschema = self._data_schema()
-
-        def _items():
-            for path, start, end, compression, whole_file in partition.splits:
-                split = tokenizer.FileSplit(path, start, end, compression, whole_file)
-                yield from tokenizer.scan_split_windows(
-                    split, xopts.row_tag, xopts.charset
-                )
-
-        records = tokenizer.window_records(_items())
-        corrupt = xopts.column_name_of_corrupt_record
-        if self._pushed and xopts.mode != "FAILFAST":
-            # raw-text reject shortcut: skip parsing records that can't
-            # match (FAILFAST keeps parsing everything so malformed
-            # records still raise exactly as an unfiltered scan would)
-            reject = _raw_prefilter(self._pushed, dschema, corrupt)
-            if reject is not None:
-                records = (r for r in records if not reject(r))
-        fix = _tz_fixer(dschema)
-        rows = parser.parse_records(records, dschema, xopts)
-        if fix is not None:
-            rows = (fix(row) for row in rows)
-        if self._pushed:
-            preds = [
-                _compile_filter(f, dschema, corrupt) for f in self._pushed
-            ]
-            rows = (row for row in rows if all(p(row) for p in preds))
-
-        arrow_flag = str(
-            get_option(self._opts_dict, "arrowBatches") or "true"
-        ).lower()
-        if arrow_flag == "false":
-            yield from _counted(rows, tally, "row_tuple")
-            return
-        batch_size = _ARROW_BATCH_ROWS
-        if _columnar_ok(dschema, xopts):
-            # Columnar fast path: record batches go straight from matched
-            # field strings to Arrow arrays with C-level casts; any batch
-            # the pattern or casts can't prove equivalent re-runs through
-            # the exact row path. `rows` above was never advanced, so
-            # `records` is still whole.
-            if not self._pushed:
-                # unpushed: consume the tokenizer's clean windows directly
-                yield from _columnar_batches(
-                    _items(), dschema, xopts, batch_size, tally
-                )
-                return
-            # pushed: per-record items, so the raw-text prefilter
-            # composes; the filters run per batch as pyarrow.compute
-            # masks when every one maps, else the row path below
-            # evaluates them all
-            masks = [
-                _compile_filter_arrow(f, dschema, corrupt)
-                for f in self._pushed
-            ]
-            if all(m is not None for m in masks):
-                import pyarrow.compute as pc
-
-                for batch in _columnar_batches(
-                    (("rec", r) for r in records), dschema, xopts, batch_size,
-                    tally,
-                ):
-                    mask = masks[0](batch)
-                    for m in masks[1:]:
-                        mask = pc.and_(mask, m(batch))
-                    batch = batch.filter(mask)
-                    if batch.num_rows:
-                        yield batch
-                return
-        # Probe arrow conversion on the first batch only: the rows are
-        # buffered, so an unmappable schema (or value shape) falls back to
-        # tuple mode with nothing lost. Later batches propagate errors —
-        # a mixed tuple/batch stream is not allowed.
-        buf = list(itertools.islice(rows, batch_size))
-        if not buf:
-            return
-        try:
-            first = next(_rows_to_arrow_batches(iter(buf), dschema, batch_size))
-        except Exception:
-            yield from _counted(itertools.chain(buf, rows), tally, "row_tuple")
-            return
-        tally.add("row_arrow", first.num_rows)
-        yield first
-        for b in _rows_to_arrow_batches(rows, dschema, batch_size):
-            tally.add("row_arrow", b.num_rows)
-            yield b
+        return read_partition(
+            partition, self._schema, XmlOptions.from_dict(self._opts_dict),
+            self._pushed,
+        )
 
 
 class XmlPushdownReader(XmlReader):
@@ -1473,7 +1368,7 @@ class XmlPushdownReader(XmlReader):
     the session conf)."""
 
     def pushFilters(self, filters):
-        """Accept every filter we can evaluate exactly on parsed rows
+        """Accept every filter ``_compile_filter_arrow`` compiles
         (top-level scalar fields, SQL null semantics); the rest stay in
         the Spark plan. Stores raw Filter dataclasses — self must remain
         picklable, so compilation to closures happens in read()."""
@@ -1494,16 +1389,10 @@ class XmlPushdownReader(XmlReader):
                 raise
             attach = []
         pnames = {n for n, _ in attach}
+        # partition filters compare against the DECLARED column types,
+        # the types the partition values are cast to
         pschema = T.StructType(
-            [
-                T.StructField(
-                    n,
-                    {"bigint": T.LongType(), "double": T.DoubleType()}.get(
-                        t, T.StringType()
-                    ),
-                )
-                for n, t in attach
-            ]
+            self._schema.fields[-len(attach):] if attach else []
         )
         dschema = self._data_schema() if attach else self._schema
         for f in filters:
@@ -1513,11 +1402,11 @@ class XmlPushdownReader(XmlReader):
             if attr is not None and len(attr) == 1 and attr[0] in pnames:
                 # constant per file: consumed by pruning whole partition
                 # groups in partitions(), never re-checked per row
-                if _compile_filter(f, pschema, corrupt) is not None:
+                if _compile_filter_arrow(f, pschema, corrupt) is not None:
                     self._ppushed.append(f)
                 else:
                     remaining.append(f)
-            elif _compile_filter(f, dschema, corrupt) is not None:
+            elif _compile_filter_arrow(f, dschema, corrupt) is not None:
                 self._pushed.append(f)
             else:
                 remaining.append(f)

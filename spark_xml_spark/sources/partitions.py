@@ -234,17 +234,6 @@ def discover_partitions(
     return files, list(zip(keys, types))
 
 
-def typed_value(raw: Optional[str], spark_type: str):
-    """Convert one raw partition-value string to its inferred type."""
-    if raw is None:
-        return None
-    if spark_type == "bigint":
-        return int(raw)
-    if spark_type == "double":
-        return float(raw)
-    return raw
-
-
 def append_partition_fields(schema, pcols):
     """schema + the discovered partition columns (typed, nullable) at the
     END — matching where the reader attaches their values. Raises on a

@@ -4,11 +4,12 @@ streaming API.
 Reader: a file-tailing source (the shape of Spark's own FileStreamSource).
 Offsets are the set of files already delivered, as a
 ``{"files": {path: size}}`` dict; each microbatch plans byte-range splits
-for newly appeared files only, so the per-batch work distributes exactly
-like the batch scan (same tokenizer, same ownership rule). This is the
-full ``DataSourceStreamReader`` (executor-side reads) — not the
-driver-side Simple variant — so batch size is bounded by split planning,
-not driver throughput.
+for newly appeared files only and reads them through the batch reader's
+``read_partition`` — same split packing, same tokenizer windows and
+columnar tier, same Arrow output. This is the full
+``DataSourceStreamReader`` (executor-side reads) — not the driver-side
+Simple variant — so batch size is bounded by split planning, not driver
+throughput.
 
 Writer: one complete XML document per partition per microbatch, named
 with the batch id; ``abort`` removes that batch's files (best-effort
@@ -17,6 +18,7 @@ rollback, matching the batch writer's semantics).
 
 from __future__ import annotations
 
+import dataclasses
 import logging
 import os
 from dataclasses import dataclass
@@ -31,21 +33,10 @@ from pyspark.sql.datasource import (
 )
 
 from spark_xml_spark.options import XmlOptions, get_option
-from spark_xml_spark.xmlcore import parser, tokenizer
+from spark_xml_spark.sources import datasource as ds
+from spark_xml_spark.xmlcore import tokenizer
 
 _LOG = logging.getLogger(__name__)
-
-
-@dataclass
-class XmlStreamPartition(InputPartition):
-    # One task reads these splits sequentially; each tuple is
-    # (path, start, end, compression, whole_file, snap_size) with
-    # snap_size the file size recorded in the committed offset. Small
-    # files are bin-packed like the batch reader's FilePartition
-    # semantics: a micro-batch that discovers thousands of small files
-    # must not schedule thousands of tasks. An empty tuple marks an
-    # empty batch (Spark requires >= 1 partition).
-    splits: tuple
 
 
 class XmlStreamReader(DataSourceStreamReader):
@@ -55,9 +46,7 @@ class XmlStreamReader(DataSourceStreamReader):
         self._path = options.get("path") or options.get("location")
         if not self._path:
             raise ValueError("path option is required for the xml stream source")
-        self._target = int(
-            get_option(options, "targetSplitSize") or 128 * 1024 * 1024
-        )
+        ds._arrow_schema(schema)  # an unmappable column type fails planning
         mf = get_option(options, "maxFilesPerTrigger")
         mb = get_option(options, "maxBytesPerTrigger")
         self._max_files = int(mf) if mf is not None else None
@@ -95,11 +84,7 @@ class XmlStreamReader(DataSourceStreamReader):
                 # reader re-derives the same name across restarts.
                 import hashlib
 
-                from spark_xml_spark.sources.datasource import (
-                    _listing_opts,
-                )
-
-                gf, rl = _listing_opts(self._opts_dict)
+                gf, rl = ds._listing_opts(self._opts_dict)
                 ident = "|".join(
                     str(x)
                     for x in (
@@ -276,9 +261,7 @@ class XmlStreamReader(DataSourceStreamReader):
         try:
             # partition-aware listing: a Hive-style layout's nested files
             # are discovered recursively; flat dirs list exactly as before
-            from spark_xml_spark.sources.datasource import _listing_opts
-
-            gf, rl = _listing_opts(self._opts_dict)
+            gf, rl = ds._listing_opts(self._opts_dict)
             listed = [
                 (f, sz)
                 for f, sz, _ in pmod.discover_partitions(
@@ -378,8 +361,12 @@ class XmlStreamReader(DataSourceStreamReader):
         seen = set((start or {}).get("files", {}))
         end_files = (end or {}).get("files", {})
         new_files = [p for p in end_files if p not in seen]
-        raw: List[tuple] = []
         xopts = XmlOptions.from_dict(self._opts_dict)
+        open_cost = ds._open_cost(self._opts_dict)
+        target = ds._split_target(
+            self._opts_dict, open_cost, [(f, int(end_files[f])) for f in new_files]
+        )
+        groups: dict = {}
         for f in new_files:
             # Deterministic replay: the offset recorded the file's size at
             # snapshot time. Plan/clamp splits against THAT size, never the
@@ -393,115 +380,61 @@ class XmlStreamReader(DataSourceStreamReader):
                 continue
             if cur < snap:
                 continue
-            for s in tokenizer.plan_splits(f, xopts.charset, self._target):
+            splits = groups.setdefault(self._pvalues_of(f), [])
+            for s in tokenizer.plan_splits(f, xopts.charset, target):
                 if s.whole_file:
                     if cur != snap:
                         # compressed/whole-file content changed; not replayable
                         continue
-                    raw.append((s.path, s.start, s.end, s.compression or "", True, snap))
+                elif s.start >= snap:
+                    continue
                 else:
-                    if s.start >= snap:
-                        continue
-                    raw.append(
-                        (s.path, s.start, min(s.end, snap), s.compression or "", False, snap)
-                    )
-        # bin-pack small splits so a many-small-files batch stays O(cores)
-        # tasks (same maxSplitBytes/open-cost shape as the batch reader)
-        open_cost = int(
-            get_option(self._opts_dict, "openCostBytes") or 4 * 1024 * 1024
-        )
-
-        def _size(t):
-            if t[2] >= 0:
-                return t[2] - t[1]
-            return t[5] if t[5] >= 0 else self._target
-
-        total = sum(_size(t) + open_cost for t in raw)
-        par = int(
-            get_option(self._opts_dict, "minPartitions")
-            or (os.cpu_count() or 8)
-        )
-        pack_target = min(self._target, max(open_cost, total // max(par, 1)))
-        raw.sort(key=lambda t: (-_size(t), t[0], t[1]))
-        parts: List[XmlStreamPartition] = []
-        cur_group: List[tuple] = []
-        cur_cost = 0
-        for t in raw:
-            sz = _size(t)
-            if cur_group and cur_cost + sz > pack_target:
-                parts.append(XmlStreamPartition(tuple(cur_group)))
-                cur_group, cur_cost = [], 0
-            cur_group.append(t)
-            cur_cost += sz + open_cost
-        if cur_group:
-            parts.append(XmlStreamPartition(tuple(cur_group)))
+                    s = dataclasses.replace(s, end=min(s.end, snap))
+                splits.append(dataclasses.replace(s, eof=snap))
+        # bin-pack small splits within each partition-value group, as the
+        # batch reader does, so a many-small-files batch stays O(cores)
+        # tasks
+        parts: List[InputPartition] = []
+        for key in sorted(
+            groups, key=lambda t: tuple("" if v is None else v for v in t)
+        ):
+            pvals: tuple = ()
+            if key:
+                (pvals,) = ds._typed_pvals(ds._pvalue_batch(
+                    [key], self._schema.fields[-len(key):]
+                ))
+            splits = groups[key]
+            parts.extend(ds._pack_splits(
+                splits, target, open_cost, {s.path: s.eof for s in splits},
+                pvals=pvals,
+            ))
         # Spark requires at least one partition per batch; an empty batch
         # gets an empty marker partition.
-        if not parts:
-            parts = [XmlStreamPartition(())]
-        return parts
+        return parts or [ds.XmlInputPartition(())]
 
-    def _attach_fields(self, filepath: str):
-        """Schema-tail fields matching this file's path-derived partition
-        keys -> [(index-in-schema, name, typed value)], [] when the
-        layout (or the declared schema) is unpartitioned. Pure path
-        logic; values convert per the DECLARED schema type (streams
-        always run with an explicit schema)."""
+    def _pvalues_of(self, filepath: str) -> tuple:
+        """The raw Hive partition values of one file (None for
+        __HIVE_DEFAULT_PARTITION__) when the schema exposes its partition
+        keys as its trailing fields, else (). Pure path logic; the
+        values are typed as the schema declares them."""
         from spark_xml_spark.sources import partitions as pmod
 
-        from spark_xml_spark.sources.datasource import _listing_opts
-
-        _, recursive = _listing_opts(self._opts_dict)
+        _, recursive = ds._listing_opts(self._opts_dict)
         if recursive:
             # recursiveFileLookup disables partition inference (batch
             # parity): name=value directory names are plain directories,
             # never value sources — the field parses from file content
-            return []
+            return ()
         kv = pmod.partition_values_of(self._path, filepath)
-        if not kv:
-            return []
-        names = [f.name for f in self._schema.fields]
         keys = [k for k, _ in kv]
-        if names[-len(keys):] != keys:
-            return []  # schema does not expose the partition columns
-        out = []
-        for (k, v), f in zip(kv, self._schema.fields[-len(keys):]):
-            if v is None:
-                out.append((k, None))
-            elif isinstance(f.dataType, (T.LongType, T.IntegerType)):
-                out.append((k, int(v)))
-            elif isinstance(f.dataType, (T.DoubleType, T.FloatType)):
-                out.append((k, float(v)))
-            else:
-                out.append((k, v))
-        return out
+        if not keys or [f.name for f in self._schema.fields[-len(keys):]] != keys:
+            return ()  # schema does not expose the partition columns
+        return tuple(v for _, v in kv)
 
-    def read(self, partition: XmlStreamPartition) -> Iterator[tuple]:
-        from spark_xml_spark.sources.datasource import _tz_fixer
-
-        xopts = XmlOptions.from_dict(self._opts_dict)
-
-        def _rows():
-            for path, start, end, compression, whole_file, snap in partition.splits:
-                split = tokenizer.FileSplit(
-                    path, start, end, compression or None, whole_file, eof=snap
-                )
-                attach = self._attach_fields(path)
-                if attach:
-                    dschema = T.StructType(
-                        self._schema.fields[: -len(attach)]
-                    )
-                    pv = tuple(v for _, v in attach)
-                else:
-                    dschema, pv = self._schema, ()
-                records = tokenizer.scan_split(split, xopts.row_tag, xopts.charset)
-                # same UTC pinning as the batch reader: a naive datetime
-                # would be read in the worker's local zone on its way in
-                fix = _tz_fixer(dschema)
-                for row in parser.parse_records(records, dschema, xopts):
-                    yield (fix(row) if fix else tuple(row)) + pv
-
-        return _rows()
+    def read(self, partition: ds.XmlInputPartition) -> Iterator:
+        return ds.read_partition(
+            partition, self._schema, XmlOptions.from_dict(self._opts_dict)
+        )
 
     def commit(self, end: dict) -> None:
         self._learn_planned(end)

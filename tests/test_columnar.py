@@ -14,14 +14,26 @@ from pyspark.sql import types as T
 
 from spark_xml_spark.options import XmlOptions
 from spark_xml_spark.sources import datasource as D
-from spark_xml_spark.xmlcore import parser
+from spark_xml_spark.xmlcore import parser, tokenizer
+
+
+def _exact_rows(path, schema, opts):
+    """The Spark-free exact row path over every file under ``path``: the
+    generic parser and Arrow assembly (``D._row_batches``), as row
+    dicts."""
+    xopts = XmlOptions.from_dict(opts)
+    records = (
+        r
+        for s in tokenizer.plan_splits(str(path), xopts.charset)
+        for r in tokenizer.scan_split(s, xopts.row_tag, xopts.charset)
+    )
+    return [
+        d for b in D._row_batches(records, schema, xopts) for d in b.to_pylist()
+    ]
 
 
 def _both_paths(records, schema, opts):
-    fix = D._tz_fixer(schema)
-    rows = parser.parse_records(iter(records), schema, opts)
-    rows = [fix(r) for r in rows] if fix else list(rows)
-    ref = list(D._rows_to_arrow_batches(iter(rows), schema, 512))
+    ref = list(D._row_batches(records, schema, opts, 512))
     col = list(D._columnar_batches(
         (("rec", r) for r in records), schema, opts, 512, D._TierTally()
     ))
@@ -259,14 +271,16 @@ def test_attr_spark_end_to_end(spark, tmp_path):
     out = str(tmp_path / "t")
     write_xml(df.repartition(2), out, rowTag="row")
     a = read_xml(spark, out, rowTag="row")
-    b = read_xml(spark, out, rowTag="row", arrowBatches="false")
+    b = spark.createDataFrame(
+        _exact_rows(out, a.schema, {"rowTag": "row"}), a.schema
+    )
     assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
     assert a.count() == 500
 
 
 def test_spark_end_to_end_matches_cached_table(spark, tmp_path):
-    """Full engine read (columnar path active) agrees with arrowBatches=off
-    (pure row path) on a real generated file."""
+    """Full engine read (columnar path active) agrees with the exact row
+    path on a real generated file."""
     from spark_xml_spark.sources.api import read_xml, write_xml
 
     df = spark.createDataFrame(
@@ -276,7 +290,9 @@ def test_spark_end_to_end_matches_cached_table(spark, tmp_path):
     out = str(tmp_path / "t")
     write_xml(df.repartition(2), out, rowTag="row")
     a = read_xml(spark, out, rowTag="row")
-    b = read_xml(spark, out, rowTag="row", arrowBatches="false")
+    b = spark.createDataFrame(
+        _exact_rows(out, a.schema, {"rowTag": "row"}), a.schema
+    )
     assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
     assert a.count() == 500
 
@@ -367,7 +383,9 @@ def test_struct_columnar_spark_end_to_end(spark, tmp_path):
     out = str(tmp_path / "vt")
     write_xml(df.repartition(2), out, rowTag="order")
     a = read_xml(spark, out, rowTag="order")
-    b = read_xml(spark, out, rowTag="order", arrowBatches="false")
+    b = spark.createDataFrame(
+        _exact_rows(out, a.schema, {"rowTag": "order"}), a.schema
+    )
     assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
     assert a.count() == 400
 
@@ -549,10 +567,7 @@ def _reader_read(tmp_path, doc, schema, opts, filters=None):
     out = []
     for part in reader.partitions():
         for item in reader.read(part):
-            if isinstance(item, pa.RecordBatch):
-                out.extend(item.to_pylist())
-            else:
-                out.append(dict(zip(schema.names, item)))
+            out.extend(item.to_pylist())
     return out
 
 
@@ -589,9 +604,7 @@ def test_empty_root_attribute_follows_parse_mode(tmp_path, mode):
         want.append({"_id": None, "_status": None, "price": None})
     assert got == want
     # the exact row path agrees
-    exact = _reader_read(
-        tmp_path, _ATTR_DOC, _ATTR_SCHEMA, {**opts, "arrowBatches": "false"}
-    )
+    exact = _exact_rows(tmp_path / "t.xml", _ATTR_SCHEMA, opts)
     assert exact == want
 
 
@@ -667,9 +680,7 @@ def test_quoted_attribute_window_read_equals_row_path(tmp_path, monkeypatch):
     got = _reader_read(tmp_path, doc, schema, {"rowTag": "r"})
     tiers = _tier_rows(stats)
     assert tiers.get("columnar_window") == 3000, tiers
-    exact = _reader_read(
-        tmp_path, doc, schema, {"rowTag": "r", "arrowBatches": "false"}
-    )
+    exact = _exact_rows(tmp_path / "t.xml", schema, {"rowTag": "r"})
     assert len(got) == 3000
     assert got == exact
     assert got[1] == {"_a": "it's v1", "_b": 1, "k": 1, "t": "don't 1"}
@@ -723,3 +734,19 @@ def test_simple_struct_scan_served_by_columnar_tier(tmp_path, monkeypatch):
     tiers = _tier_rows(stats)
     assert sum(n for t, n in tiers.items() if t.startswith("columnar")) == 3000
     assert not any(t.startswith("row_") and n for t, n in tiers.items())
+
+
+def test_null_type_reads_null_and_unmappable_type_fails_at_build(tmp_path):
+    """A ``NullType`` column maps to Arrow's null type and reads null; a
+    type with no Arrow mapping fails when the reader is built, naming
+    the column, instead of at the first batch."""
+    schema = T.StructType(
+        [T.StructField("a", T.StringType()), T.StructField("b", T.NullType())]
+    )
+    got = _reader_read(
+        tmp_path, "<rows><r><a>x</a><b>y</b></r></rows>", schema, {"rowTag": "r"}
+    )
+    assert got == [{"a": "x", "b": None}]
+    bad = T.StructType([T.StructField("t", T.TimestampNTZType())])
+    with pytest.raises(TypeError, match="column 't'"):
+        D.XmlReader({"path": str(tmp_path), "rowTag": "r"}, bad)

@@ -127,3 +127,28 @@ def test_baseline_has_no_unstamped_superseded_claims():
                     or "earlier run" in window
                     or "superseded" in window
                 ), f"unstamped stale citation {stale!r}: {line!r}"
+
+
+def test_unsettled_bench_run_leaves_headline_alone(tmp_path):
+    """bench.py writes a settled run to BENCH_LOCAL.json and an unsettled
+    one to the BENCH_LOCAL.unsettled.json side file, so a run on a loaded
+    host can never replace the committed headline."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(REPO, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    headline = tmp_path / "BENCH_LOCAL.json"
+    headline.write_text('{"value": 1.0, "settled": true}\n')
+    side = bench.write_artifact(str(tmp_path), '{"value": 2.0}', settled=False)
+    assert side == str(tmp_path / "BENCH_LOCAL.unsettled.json")
+    assert (tmp_path / "BENCH_LOCAL.unsettled.json").read_text() == (
+        '{"value": 2.0}\n'
+    )
+    assert headline.read_text() == '{"value": 1.0, "settled": true}\n'
+    main = bench.write_artifact(str(tmp_path), '{"value": 3.0}', settled=True)
+    assert main == str(headline)
+    assert headline.read_text() == '{"value": 3.0}\n'

@@ -14,10 +14,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_xml_spark.sources.api import read_xml
+from spark_xml_spark.sources.datasource import _pvalue_batch, _typed_pvals
 from spark_xml_spark.sources.partitions import (
     append_partition_fields,
     discover_partitions,
-    typed_value,
 )
 
 
@@ -53,8 +53,11 @@ def test_discover_partitions_types_and_nulls(tmp_path):
     assert len(files) == 4
     vals = {pv for _, _, pv in files}
     assert (None, "EU") in vals and ("2024", "EU") in vals
-    assert typed_value("2024", "bigint") == 2024
-    assert typed_value(None, "bigint") is None
+    # values are typed as the schema declares them; NULL stays None
+    year = T.StructType([T.StructField("year", T.LongType())])
+    assert _typed_pvals(_pvalue_batch([("2024",), (None,)], year.fields)) == [
+        (2024,), (None,),
+    ]
     # mixed top-level data file + partition dirs -> conflict error
     with open(f"{base}/stray.xml", "w") as fh:
         fh.write("<root/>")
@@ -294,3 +297,36 @@ def test_path_glob_filter_zero_match_with_explicit_schema(spark, tmp_path):
     )
     with pytest.raises(Exception, match="pathGlobFilter"):
         df.collect()
+
+
+@pytest.mark.parametrize("pushed", [False, True], ids=["unpushed", "pushed"])
+@pytest.mark.parametrize("ptype", ["bigint", "int", "string"])
+def test_partition_column_takes_declared_type(spark, tmp_path, ptype, pushed):
+    """An explicit schema may declare a partition column with a type other
+    than the discovered one (``bigint`` here): the constant column and a
+    pushed partition filter both use the declared type."""
+    value = "2024" if ptype == "string" else 2024
+    ptype = {"bigint": T.LongType(), "int": T.IntegerType()}.get(
+        ptype, T.StringType()
+    )
+    base = str(tmp_path)
+    _tree(base, LAYOUT)
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("name", T.StringType()),
+            T.StructField("year", ptype),
+            T.StructField("region", T.StringType()),
+        ]
+    )
+    df = read_xml(
+        spark, base, schema=schema, rowTag="rec",
+        filterPushdown=str(pushed).lower(),
+    )
+    got = df.filter(F.col("year") == F.lit(value)).collect()
+    assert sorted((r.id, r.year, r.region) for r in got) == [
+        (4, value, "EU"), (5, value, "EU"),
+    ]
+    # a fresh read: Spark reuses one relation's pushed filters
+    full = read_xml(spark, base, schema=schema, rowTag="rec").collect()
+    assert sorted(r.year for r in full) == [type(value)(2023)] * 3 + [value] * 2

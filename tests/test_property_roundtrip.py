@@ -411,12 +411,8 @@ def test_strict_and_window_paths_equivalence_property(recs):
     opts = XmlOptions.from_dict({"rowTag": "r"})
 
     # reference: generic row path via arrow conversion
-    fix = D._tz_fixer(_FLAT_SCHEMA)
-    rows = list(parser.parse_records(iter(recs), _FLAT_SCHEMA, opts))
-    if fix:
-        rows = [fix(r) for r in rows]
     ref = pa.Table.from_batches(
-        list(D._rows_to_arrow_batches(iter(rows), _FLAT_SCHEMA, 256))
+        list(D._row_batches(recs, _FLAT_SCHEMA, opts, 256))
     )
 
     # record-based columnar (strict tried first internally)

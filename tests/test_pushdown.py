@@ -1,6 +1,6 @@
 """Catalyst filter pushdown into the XML scan (Spark 4.1 Python Data
-Source pushFilters API). Pushed predicates are evaluated on the parsed
-row tuples inside the scan with SQL null semantics, so results must be
+Source pushFilters API). Pushed predicates are evaluated as Arrow masks
+on the scan's batches with SQL null semantics, so results must be
 bit-identical to Spark-side filtering — and the Filter node disappears
 from the physical plan. The raw-text prefilter additionally skips the
 parse for records that cannot match a string literal.
@@ -13,6 +13,7 @@ DataFrame/view. The default path must therefore never engage pushdown.
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_xml_spark.sources import read_xml, write_xml
 
@@ -153,9 +154,19 @@ def test_pushdown_through_sql_ddl(push, tmp_path):
         push.sql("DROP TABLE IF EXISTS push_t")
 
 
+def _row_path_schema(schema):
+    """``schema`` plus a corrupt-record column: a schema the columnar
+    scan rejects (``_columnar_ok``), so its reads take the exact row
+    path."""
+    return T.StructType(
+        schema.fields + [T.StructField("_corrupt_record", T.StringType())]
+    )
+
+
 def test_pushdown_columnar_vs_row_paths_agree(spark, tmp_path):
-    """Pushed filters evaluated as pyarrow.compute masks on the columnar
-    path must select exactly the rows the row-tuple predicates select."""
+    """Pushed filters evaluated as pyarrow.compute masks select the same
+    rows whether the batches come from the columnar scan or from the
+    exact row path."""
     df = spark.createDataFrame(
         [(k, f"n{k % 7}", float(k) if k % 5 else None) for k in range(400)],
         "k bigint, name string, v double",
@@ -164,10 +175,10 @@ def test_pushdown_columnar_vs_row_paths_agree(spark, tmp_path):
     write_xml(df.repartition(2), out, rowTag="row")
 
     def run(columnar):
+        schema = df.schema if columnar == "true" else _row_path_schema(df.schema)
         d = read_xml(
-            spark, out, rowTag="row", filterPushdown="true",
-            arrowBatches=columnar,
-        )
+            spark, out, rowTag="row", schema=schema, filterPushdown="true",
+        ).select(*df.columns)
         return {
             tuple(r)
             for r in d.filter(
@@ -205,9 +216,10 @@ def test_pushdown_not_in_with_null_three_valued(push, tmp_path):
 
     for columnar in ("true", "false"):
         pushed = read_xml(
-            push, out, rowTag="item", schema=schema,
-            filterPushdown="true", arrowBatches=columnar,
-        )
+            push, out, rowTag="item",
+            schema=schema if columnar == "true" else _row_path_schema(schema),
+            filterPushdown="true",
+        ).select(*schema.names)
         cond = ~F.col("v").isin(1, None)
         assert pushed.filter(cond).count() == 0, columnar
         # sanity: same condition without pushdown also selects nothing
@@ -239,8 +251,45 @@ def test_pushdown_not_eqnullsafe_keeps_null_rows(push, tmp_path):
     assert any(v is None for _, v in expected)  # null rows ARE selected
     for columnar in ("true", "false"):
         pushed = read_xml(
-            push, out, rowTag="item", schema=schema,
-            filterPushdown="true", arrowBatches=columnar,
-        )
+            push, out, rowTag="item",
+            schema=schema if columnar == "true" else _row_path_schema(schema),
+            filterPushdown="true",
+        ).select(*schema.names)
         got = sorted(map(tuple, pushed.filter(cond).collect()))
         assert got == expected, columnar
+
+
+@pytest.mark.parametrize(
+    "cond, want",
+    [
+        ("x > 0.5", [0, 1, 3]),
+        ("x = CAST('NaN' AS DOUBLE)", [1, 3]),
+        ("x >= 0.05", [0, 1, 2, 3]),
+    ],
+)
+def test_pushed_float_filters_keep_spark_nan_semantics(push, tmp_path, cond, want):
+    """Spark orders NaN above every other value and treats NaN = NaN as
+    true; Arrow's IEEE comparisons do neither. A pushed comparison on a
+    double column must therefore select exactly the rows the unpushed
+    filter selects, NaN rows included."""
+    (tmp_path / "nan.xml").write_text(
+        "<rows>"
+        + "".join(
+            f"<r><id>{i}</id><x>{x}</x></r>"
+            for i, x in enumerate(["1.0", "NaN", "0.1", "NaN"])
+        )
+        + "</rows>"
+    )
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("x", T.DoubleType())]
+    )
+
+    def ids(pushdown):
+        df = read_xml(
+            push, str(tmp_path / "nan.xml"), rowTag="r", schema=schema,
+            filterPushdown=pushdown,
+        )
+        return sorted(r.id for r in df.filter(F.expr(cond)).collect())
+
+    assert ids("false") == want
+    assert ids("true") == want

@@ -1238,34 +1238,130 @@ def test_stream_stream_interval_join_validation(spark, tmp_path):
         stream_stream_interval_join(stream, stream, key=[])
 
 
-def test_stream_read_pins_timestamps_to_utc_like_batch(tmp_path):
-    """The stream reader's rows equal the batch reader's row path: naive
-    timestamps carry UTC tzinfo, so pyspark's Arrow conversion does not
-    read them in the worker's local zone (a stream under
-    TZ=America/New_York would otherwise shift 03:04:05 to 08:04:05 UTC)."""
-    from spark_xml_spark.sources.datasource import XmlReader
+def test_stream_read_pins_timestamps_to_utc_like_batch(tmp_path, monkeypatch):
+    """The stream reader reads through the batch reader, so for every
+    input shape its rows equal the batch reader's:
+    - naive timestamps carry UTC, so pyspark's Arrow conversion does not
+      read them in the worker's local zone (a stream under
+      TZ=America/New_York would otherwise shift 03:04:05 to 08:04:05 UTC);
+    - a flat file is served by the columnar window tier, row for row;
+    - a nested file takes the exact row path;
+    - a Hive-partitioned directory attaches its values, typed as the
+      schema declares them;
+    - a file that grew after the offset snapshot yields exactly the rows
+      inside the size the offset recorded."""
+    import json
+
+    from spark_xml_spark.sources import datasource as D
     from spark_xml_spark.streaming.source import XmlStreamReader
 
+    def rows(reader, parts):
+        return [d for p in parts for b in reader.read(p) for d in b.to_pylist()]
+
+    def tier_rows(stats):
+        out = {}
+        for f in stats.iterdir():
+            for line in f.read_text().splitlines():
+                rec = json.loads(line)
+                if rec["rows"]:
+                    out[rec["tier"]] = out.get(rec["tier"], 0) + rec["rows"]
+        return out
+
+    def stream_vs_batch(name, files, schema, grow=None):
+        """(stream rows, batch rows, stream tier rows) over ``files``
+        ({relative path: document}); ``grow`` runs between the stream's
+        offset snapshot and its read."""
+        src = tmp_path / name
+        for rel, doc in files.items():
+            (src / rel).parent.mkdir(parents=True, exist_ok=True)
+            (src / rel).write_text(doc)
+        opts = {"path": str(src), "rowTag": "r"}
+        batch = D.XmlReader(dict(opts), schema)
+        want = rows(batch, batch.partitions())
+        stream = XmlStreamReader(dict(opts), schema)
+        start, end = stream.initialOffset(), stream.latestOffset()
+        if grow is not None:
+            grow(src)
+        stats = tmp_path / f"stats-{name}"
+        stats.mkdir()
+        monkeypatch.setenv(D._TIER_STATS_ENV, str(stats))
+        got = rows(stream, stream.partitions(start, end))
+        monkeypatch.delenv(D._TIER_STATS_ENV)
+        return got, want, tier_rows(stats)
+
+    def doc(recs):
+        return "<rows>" + "".join(recs) + "</rows>"
+
+    # timestamps pinned to UTC
     schema = T.StructType(
         [
             T.StructField("ts", T.TimestampType()),
             T.StructField("k", T.LongType()),
         ]
     )
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "a.xml").write_text(
-        "<rows>"
-        + "".join(
-            f"<r><ts>2020-01-02 03:04:0{i}</ts><k>{i}</k></r>" for i in range(3)
-        )
-        + "</rows>"
+    got, want, _ = stream_vs_batch("ts", {"a.xml": doc(
+        f"<r><ts>2020-01-02 03:04:0{i}</ts><k>{i}</k></r>" for i in range(3)
+    )}, schema)
+    assert len(want) == 3 and want[0]["ts"].tzinfo is not None
+    assert got == want
+
+    # flat: every stream row on the columnar window tier
+    flat = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("name", T.StringType()),
+            T.StructField("v", T.DoubleType()),
+        ]
     )
-    opts = {"path": str(src), "rowTag": "r"}
-    stream = XmlStreamReader(dict(opts), schema)
-    parts = stream.partitions(stream.initialOffset(), stream.latestOffset())
-    got = [row for p in parts for row in stream.read(p)]
-    batch = XmlReader({**opts, "arrowBatches": "false"}, schema)
-    want = [row for p in batch.partitions() for row in batch.read(p)]
-    assert len(want) == 3 and want[0][0].tzinfo is not None
+    got, want, tiers = stream_vs_batch("flat", {"a.xml": doc(
+        f"<r><k>{k}</k><name>n{k % 7}</name><v>{k}.5</v></r>"
+        for k in range(3000)
+    )}, flat)
+    assert len(want) == 3000 and got == want
+    assert tiers == {"columnar_window": 3000}, tiers
+
+    # nested: repeated and struct children take the exact row path
+    nested = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("t", T.ArrayType(T.StringType())),
+            T.StructField(
+                "p", T.StructType([T.StructField("q", T.LongType())])
+            ),
+        ]
+    )
+    got, want, tiers = stream_vs_batch("nested", {"a.xml": doc(
+        f"<r><k>{k}</k><t>a{k}</t><t>b</t><p><q>{k * 2}</q></p></r>"
+        for k in range(200)
+    )}, nested)
+    assert len(want) == 200 and got == want
+    assert want[3] == {"k": 3, "t": ["a3", "b"], "p": {"q": 6}}
+    assert tiers == {"row_arrow": 200}, tiers
+
+    # Hive-partitioned directory, partition column declared int
+    part = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("year", T.IntegerType())]
+    )
+    got, want, _ = stream_vs_batch("part", {
+        f"year={y}/a.xml": doc(f"<r><k>{y * 10 + i}</k></r>" for i in range(3))
+        for y in (2020, 2021)
+    }, part)
+    key = lambda d: d["k"]  # noqa: E731
+    assert len(want) == 6 and sorted(got, key=key) == sorted(want, key=key)
+    assert {(d["k"], d["year"]) for d in want} >= {(20200, 2020), (20211, 2021)}
+
+    # a file that grew after the snapshot: the stream reads exactly the
+    # rows inside the recorded size (the batch read ran before the growth)
+    body = doc(f"<r><k>{k}</k><name>x</name><v>1.5</v></r>" for k in range(50))
+
+    def grow(src):
+        (src / "a.xml").write_text(
+            body[: -len("</rows>")]
+            + "".join(f"<r><k>{k}</k><name>x</name><v>1.5</v></r>"
+                      for k in range(50, 80))
+            + "</rows>"
+        )
+
+    got, want, _ = stream_vs_batch("grown", {"a.xml": body}, flat, grow)
+    assert [d["k"] for d in want] == list(range(50))
     assert got == want
